@@ -28,6 +28,7 @@ inside whole-stage codegen; no Python in the hot path.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
@@ -609,6 +610,14 @@ def connected_components(
     return labels
 
 
+def _spark_order(score):
+    """Sort key that orders and compares a non-NULL score as Spark does:
+    NaN above every number and NaN == NaN (Python's ``max`` and ``==``
+    do neither)."""
+    nan = isinstance(score, float) and math.isnan(score)
+    return (1, 0.0) if nan else (0, score)
+
+
 def resolve_duplicate_clusters(
     df: DataFrame,
     pairs: DataFrame,
@@ -640,8 +649,9 @@ def resolve_duplicate_clusters(
     relation), the member (id, score) rows — scores computed BY SPARK
     with the caller's expression, ids only joined — collect once and
     the argmax/tie-break runs in Python with the identical rule (max
-    score per component, NULL scores never win, min id among the
-    max-scoring). Over budget, the distributed cascade runs unchanged.
+    score per component with NaN above every number and NaN == NaN,
+    NULL scores never win, min id among the max-scoring). Over budget,
+    the distributed cascade runs unchanged.
     Identical survivors either way (pinned by
     test_resolve_keep_by_driver_and_distributed_agree and the
     media/funnel oracle parities).
@@ -676,7 +686,7 @@ def resolve_duplicate_clusters(
                 )
             losers_local = []
             for members in by_comp.values():
-                scored = [(i, s) for i, s in members if s is not None]
+                scored = [(i, _spark_order(s)) for i, s in members if s is not None]
                 if not scored:
                     continue  # all-NULL scores: no winner, nobody drops
                 best = max(s for _, s in scored)

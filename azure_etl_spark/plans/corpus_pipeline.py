@@ -223,7 +223,15 @@ class CurationPipeline:
         survivors feeding both pair mining and cluster resolution —
         recompute, 1.7x slower at sf0.1) but fills LAZILY on first
         use: no count job, no driver barrier, blocks evict LRU
-        instead of being explicitly released."""
+        instead of being explicitly released.
+        The session's ``canChangeCachedPlanOutputPartitioning`` lets AQE
+        size each persisted stage from its real bytes (see session.py):
+        a few hundred survivors cache in one or two partitions instead
+        of the initial shuffle count, so every later re-read (pair
+        mining, cluster resolution, media hashing, SemDeDup) runs only
+        the tasks the data needs. A consumer that keyed on the cached
+        frame's hash partitioning may pay one extra exchange; survivor
+        sets and counts are unchanged."""
         from pyspark import StorageLevel
 
         if self.counts == "off":

@@ -15,6 +15,14 @@ Scale notes (100 TB / 1000 executors):
 - We never hard-code `coalesce(1)` in the engine (the reference does —
   `bronzeToSilver.scala:16` — which is an anti-pattern at scale); small
   single-file output is an opt-in flag in sources/files.py.
+- `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` lets AQE
+  size a persisted plan's final shuffle like any other stage. Spark's
+  default (false) keeps every cached frame at the initial shuffle
+  partition count whatever its size, so each re-read of a small funnel
+  stage fans out to that many tasks, and at scale a large one cannot be
+  split on skew. The trade-off: a consumer that relied on a cached
+  frame's hash partitioning may pay one extra exchange. Results cannot
+  change, only partition counts move.
 """
 
 from __future__ import annotations
@@ -24,6 +32,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "azure-etl-spark"
+CACHED_PLAN_REPARTITION = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
 
 
 def session_builder(
@@ -44,6 +53,7 @@ def session_builder(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config(CACHED_PLAN_REPARTITION, "true")
         # runtime bloom-filter semi-join pruning: a selective dim filter
         # builds a bloom filter that prunes the fact scan BEFORE its
         # shuffle — off by default in Spark, a large win for shuffle
@@ -73,6 +83,7 @@ def configure_for_oracle(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+    spark.conf.set(CACHED_PLAN_REPARTITION, "true")
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:

@@ -942,20 +942,26 @@ def test_resolve_keep_by_driver_and_distributed_agree(spark):
     fast path (collect cluster members' (id, score), argmax in Python).
     Both paths must keep identical survivors — including the NULL-score
     rules (a NULL score never wins; an all-NULL cluster drops nobody;
-    a NULL-scored member of a scored cluster drops)."""
+    a NULL-scored member of a scored cluster drops) and Spark's NaN
+    ordering (NaN sorts above every number and equals itself)."""
     from azure_etl_spark.operators.dedup import resolve_duplicate_clusters
 
+    nan = float("nan")
     df = spark.createDataFrame(
         [
             (1, 5.0), (2, 9.0), (3, 9.0),        # cluster {1,2,3}: 2 wins (tie->min id)
             (10, None), (11, 3.0),               # cluster {10,11}: 11 wins, 10 drops
             (20, None), (21, None),              # all-NULL cluster: nobody drops
             (30, 1.0),                           # no cluster: survives
+            (40, nan), (41, 7.0),                # NaN is greatest: 40 wins
+            (50, nan), (51, nan),                # NaN == NaN tie: 50 wins
+            (60, 2.0), (61, nan), (62, None),    # NaN beats 2.0 and NULL
         ],
         "doc_id long, score double",
     )
     pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (20, 21)], "id_a long, id_b long"
+        [(1, 2), (2, 3), (10, 11), (20, 21), (40, 41), (50, 51), (60, 61), (61, 62)],
+        "id_a long, id_b long",
     )
     keep = F.col("score")
     fast = {
@@ -968,4 +974,4 @@ def test_resolve_keep_by_driver_and_distributed_agree(spark):
             df, pairs, keep_by=keep, driver_max_nodes=0
         ).collect()
     }
-    assert fast == slow == {2, 11, 20, 21, 30}
+    assert fast == slow == {2, 11, 20, 21, 30, 40, 50, 61}

@@ -237,6 +237,43 @@ def test_aqe_coalesces_small_shuffle_partitions(spark, sf_dir):
         spark.conf.set("spark.sql.shuffle.partitions", saved)
 
 
+def test_cached_plan_output_partitioning_is_on_by_default(spark):
+    """Both the engine's builder and ``configure_for_oracle`` (applied to
+    the external driver's vanilla session) let AQE change a cached
+    plan's output partitioning. Spark's default (false) pins every
+    persisted stage at the initial shuffle partition count."""
+    from azure_etl_spark.session import CACHED_PLAN_REPARTITION, configure_for_oracle
+
+    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    assert CACHED_PLAN_REPARTITION == key
+    # the fixture session was started by session_builder: its builder
+    # confs land in the SparkContext conf, which runtime sets never touch
+    assert spark.sparkContext.getConf().get(key) == "true"
+    vanilla = spark.newSession()
+    vanilla.conf.unset(key)
+    assert vanilla.conf.get(key) == "false"
+    assert configure_for_oracle(vanilla).conf.get(key) == "true"
+
+
+def test_persisted_stage_is_sized_by_aqe(spark):
+    """A persisted aggregate over a few rows caches in fewer partitions
+    than the session's initial shuffle count, so every re-read of it runs
+    only the tasks its data needs."""
+    initial = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    df = (
+        spark.range(64)
+        .withColumn("k", F.col("id") % 5)
+        .groupBy("k")
+        .agg(F.count("*").alias("n"))
+        .persist()
+    )
+    try:
+        assert df.count() == 5
+        assert df.rdd.getNumPartitions() < initial
+    finally:
+        df.unpersist()
+
+
 def test_zstd_parquet_roundtrip(spark, sf_dir, tmp_path):
     """Column-store codec control: zstd-compressed parquet writes read
     back exactly (zstd trades ~10-20% cpu for better ratios than snappy
