@@ -33,6 +33,10 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+from azure_etl_spark.session import LOCAL_FRAME_TYPES, local_frame
+from azure_etl_spark.sources.files import ensure_min_partitions
 
 
 def distinct_rows(df: DataFrame) -> DataFrame:
@@ -269,14 +273,10 @@ def _banded_candidates(
     # The signature frame is PROJECTED to (id, minhash[, packed]) —
     # never the text — before the band self-join consumes it twice
     # (guide §2.3: project before the exchange; the wide text column
-    # must not ride the band shuffle). A round-13 commit additionally
-    # interposed a lazy localCheckpoint here claiming each join side
-    # re-ran the shingle+K-hash map work; re-measurement with the
-    # corrected timing boundary (construction included — under AQE a
-    # lazy checkpoint materializes upstream stages at build time) and
-    # completed-task accounting showed checkpoint on/off identical in
-    # both wall time and executed tasks (exchange reuse already shares
-    # the signature pass), so the checkpoint was removed.
+    # must not ride the band shuffle). Each join side re-runs whatever
+    # produced ``sig``: completed-task accounting counts one input scan
+    # per consumer, so exchange reuse does not share the signature pass
+    # and a caller passes a materialized ``sig`` (see _signatures).
     cols = [id_col, "__packed"] if carry_sig else [id_col]
     # band-key array as ONE parsed expression (same rationale as the
     # signature min-folds above: B structs x R element refs built as
@@ -316,6 +316,29 @@ def _banded_candidates(
     return cand.dropDuplicates(["id_a", "id_b"])
 
 
+def _signatures(
+    df: DataFrame, id_col: str, text_col: str, num_hashes: int, shingle_n: int
+) -> DataFrame:
+    """The narrow (id, minhash) frame, computed ONCE over every core.
+
+    The pair frame's consumers (both band-join sides, and both union
+    directions of :func:`connected_components`) would each re-run the
+    shingle + K-hash map work; one eager local checkpoint of the narrow
+    frame runs it in a single job and every consumer reads the stored
+    blocks. ``ensure_min_partitions`` fans a few-partition input (a
+    small persisted funnel stage that AQE sized to one partition) out
+    to the cluster's parallelism first, so that job is not one task;
+    it is a no-op on inputs that already have enough partitions and its
+    probe runs no job.
+    """
+    wide = ensure_min_partitions(df.select(id_col, text_col))
+    return (
+        with_minhash(wide, text_col, num_hashes, shingle_n)
+        .select(id_col, "minhash")
+        .localCheckpoint(eager=True)
+    )
+
+
 def minhash_near_dup_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -328,7 +351,8 @@ def minhash_near_dup_pairs(
     """LSH candidate generation + estimated-Jaccard filter.
 
     Plan shape (the part that must survive 100 TB):
-      1. signature: narrow, no shuffle;
+      1. signature: narrow, computed once and stored (one job over
+         every core, see :func:`_signatures`);
       2. explode to B rows/doc keyed by (band, xxhash64(band slice));
       3. self equi-join on the band key => shuffle carries (key, id,
          PACKED signature — two 31-bit values per BIGINT, half the raw
@@ -345,7 +369,7 @@ def minhash_near_dup_pairs(
     if num_hashes % 2:
         raise ValueError("num_hashes must be even (signatures ride packed)")
     pairs = _banded_candidates(
-        with_minhash(df, text_col, num_hashes, shingle_n),
+        _signatures(df, id_col, text_col, num_hashes, shingle_n),
         id_col,
         num_hashes,
         bands,
@@ -491,11 +515,15 @@ def connected_components(
 
     Driver-round economy (the funnel's cost is per-stage JOB overhead,
     not data): the first propagation folds into label init (one groupBy
-    instead of init + a full round); each round is ONE driver job — the
-    round's frame is a LAZY localCheckpoint (lineage truncated at zero
-    job cost) materialized by the convergence probe, a limit-1 count of
-    the in-frame ``__changed`` flag. Measured on the sf0.1 funnel
-    graphs: 13 driver jobs -> 4 per CC invocation, labels unchanged.
+    instead of init + a full round); each round's frame is a
+    ``localCheckpoint(eager=False)`` that truncates the lineage, and
+    the convergence probe (a limit-1 count of the in-frame
+    ``__changed`` flag) fills it. The checkpoint is not free under AQE:
+    building it executes the round's shuffle stages as blocking jobs
+    there and then (1 job per checkpoint over a groupBy with AQE on, 0
+    with it off); only the final stage waits for the probe. Measured on
+    the sf0.1 funnel graphs: 13 driver jobs -> 4 per CC invocation,
+    labels unchanged.
 
     SMALL-GRAPH FAST PATH (round 14, ``driver_max_edges``): dedup
     graphs are sized by the DUPLICATES, not the corpus — a labeled job
@@ -525,7 +553,8 @@ def connected_components(
         .distinct()
         .persist()
     )
-    if driver_max_edges:
+    id_type = edges.schema["a"].dataType
+    if driver_max_edges and isinstance(id_type, LOCAL_FRAME_TYPES):
         head = edges.limit(driver_max_edges + 1).collect()
         if len(head) <= driver_max_edges:
             parent: dict = {}
@@ -547,13 +576,9 @@ def connected_components(
                     if rb < ra:
                         ra, rb = rb, ra
                     parent[rb] = ra
-            labels = [(x, find(x)) for x in parent]
-            spark = pairs.sparkSession
-            id_type = edges.schema["a"].dataType
-            from pyspark.sql.types import StructField, StructType
-
-            out = spark.createDataFrame(
-                labels,
+            out = local_frame(
+                pairs.sparkSession,
+                [(x, find(x)) for x in parent],
                 StructType(
                     [
                         StructField("id", id_type),
@@ -662,15 +687,14 @@ def resolve_duplicate_clusters(
             F.col("id").alias(id_col)
         )
         return df.join(losers, id_col, "left_anti")
-    if driver_max_nodes:
+    id_type = comp.schema["id"].dataType
+    if driver_max_nodes and isinstance(id_type, LOCAL_FRAME_TYPES):
         head = comp.limit(driver_max_nodes + 1).collect()
         if len(head) <= driver_max_nodes:
-            from pyspark.sql.types import StructField, StructType
-
             spark = df.sparkSession
             comp_of = {r["id"]: r["component"] for r in head}
-            id_type = comp.schema["id"].dataType
-            ids_df = spark.createDataFrame(
+            ids_df = local_frame(
+                spark,
                 [(i,) for i in comp_of],
                 StructType([StructField("id", id_type)]),
             )
@@ -692,7 +716,8 @@ def resolve_duplicate_clusters(
                 best = max(s for _, s in scored)
                 winner = min(i for i, s in scored if s == best)
                 losers_local.extend(i for i, _ in members if i != winner)
-            losers = spark.createDataFrame(
+            losers = local_frame(
+                spark,
                 [(i,) for i in losers_local],
                 StructType([StructField(id_col, id_type)]),
             )

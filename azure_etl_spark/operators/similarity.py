@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from azure_etl_spark.functions.vectors import cosine, dot, norm
+from azure_etl_spark.session import local_frame
 
 
 def brute_force_topk(
@@ -599,9 +600,9 @@ def semantic_dedup(
 
     Returns (id_col, cid, kept) for every input row.
     """
-    # lazy rounds: SemDeDup consumes only the assignments, once — the
-    # k-means chain materializes inside the caller's single action
-    # instead of max_iter+1 driver-synchronized checkpoint jobs
+    # lazy rounds: SemDeDup consumes only the assignments, once, so
+    # the k-means chain is not cut into max_iter+1 eager checkpoint
+    # jobs; it runs when the checkpoint below is built
     assign, _ = kmeans_fit(
         df, k=k, max_iter=max_iter, id_col=id_col, vec_col=vec_col,
         eager_rounds=False,
@@ -610,9 +611,11 @@ def semantic_dedup(
         assign.withColumnRenamed(id_col, "id"), "id"
     )
     # the (id, cid, v) set feeds BOTH self-join sides and the final
-    # keep projection; a lazy checkpoint shares ONE materialization of
-    # the nested k-means chain across all three references without
-    # adding a driver-synchronized job
+    # keep projection; the checkpoint shares ONE materialization of the
+    # nested k-means chain across all three references. Lazy is not
+    # free under AQE: building it executes the chain's shuffle stages
+    # as blocking jobs at once; only its final stage waits for the
+    # first read
     vecs = vecs.localCheckpoint(eager=False)
     # Precompute each vector's norm ONCE (pair count is quadratic in
     # cluster size, vector count is linear): the per-pair work drops
@@ -899,8 +902,8 @@ def ivf_index_build(
     spark = df.sparkSession
     root = path.rstrip("/")
     _ivf_write_generation_tables(df, f"{root}/gen=0", k, max_iter, id_col, vec_col)
-    gen = spark.createDataFrame(
-        [(0, int(k), int(max_iter))], "gen int, k int, max_iter int"
+    gen = local_frame(
+        spark, [(0, int(k), int(max_iter))], "gen int, k int, max_iter int"
     )
     write_snapshot(gen, f"{root}/generation", mode="overwrite")
 
@@ -1028,8 +1031,8 @@ def ivf_index_refit(
     _ivf_write_generation_tables(
         vectors, f"{root}/gen={g + 1}", k, max_iter, id_col, vec_col
     )
-    gen = spark.createDataFrame(
-        [(g + 1, k, max_iter)], "gen int, k int, max_iter int"
+    gen = local_frame(
+        spark, [(g + 1, k, max_iter)], "gen int, k int, max_iter int"
     )
     write_snapshot(gen, f"{root}/generation", mode="overwrite")
     return g + 1
@@ -1132,7 +1135,8 @@ def pq_index_build(
     _pq_write_generation_tables(
         df, f"{root}/gen=0", m, k_codes, max_iter, dim, id_col, vec_col
     )
-    gen = spark.createDataFrame(
+    gen = local_frame(
+        spark,
         [(0, int(m), int(k_codes), int(max_iter), int(dim))],
         "gen int, m int, k_codes int, max_iter int, dim int",
     )
@@ -1226,7 +1230,8 @@ def pq_index_refit(
     _pq_write_generation_tables(
         vectors, f"{root}/gen={g + 1}", m, k_codes, max_iter, dim, id_col, vec_col
     )
-    gen = spark.createDataFrame(
+    gen = local_frame(
+        spark,
         [(g + 1, m, k_codes, max_iter, dim)],
         "gen int, m int, k_codes int, max_iter int, dim int",
     )

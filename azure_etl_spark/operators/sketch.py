@@ -49,6 +49,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from azure_etl_spark.session import local_frame
+
 
 def _row_hash(c: Column, salt: int | str, bits: int = 32) -> Column:
     """First-``bits/4``-hex-digits md5 bucket hash of
@@ -789,8 +791,8 @@ def loghist_quantiles(
         F.sum("cnt").over(w_cum).alias("cum"),
         F.sum("cnt").over(w_all).cast("bigint").alias("n"),
     )
-    qs = spark.createDataFrame(
-        [(int(a), int(c)) for a, c in quantiles], "q_num int, q_den int"
+    qs = local_frame(
+        spark, [(int(a), int(c)) for a, c in quantiles], "q_num int, q_den int"
     )
     picked = (
         cum.crossJoin(F.broadcast(qs))
@@ -888,8 +890,8 @@ def loghist_grouped_quantiles(
         .cast("bigint")
         .alias("n"),
     )
-    qs = spark.createDataFrame(
-        [(int(a), int(c)) for a, c in quantiles], "q_num int, q_den int"
+    qs = local_frame(
+        spark, [(int(a), int(c)) for a, c in quantiles], "q_num int, q_den int"
     )
     picked = (
         cum.crossJoin(F.broadcast(qs))

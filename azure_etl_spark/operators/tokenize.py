@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from azure_etl_spark.operators.text import tokens
+from azure_etl_spark.session import local_frame
 
 SEP = "\x1f"  # US: wraps every symbol
 DSEP = SEP + SEP  # between adjacent symbols
@@ -126,8 +127,10 @@ def bpe_train(words: DataFrame, n_merges: int = 8) -> tuple[DataFrame, list[Data
             .localCheckpoint(eager=True)
         )
     if not rounds:  # no adjacent pairs at all (every word is one symbol)
-        empty = words.sparkSession.createDataFrame(
-            [], "rank int, lhs string, rhs string, merged string, pair_count bigint"
+        empty = local_frame(
+            words.sparkSession,
+            [],
+            "rank int, lhs string, rhs string, merged string, pair_count bigint",
         )
         return empty, rounds
     merges = rounds[0].drop("pat", "rep")

@@ -55,6 +55,7 @@ from azure_etl_spark.operators.tokenize import (
     _symbols,
     word_frequencies,  # noqa: F401  (re-export: the shared corpus scan)
 )
+from azure_etl_spark.session import local_frame
 
 WP_WORD_MAX = 12  # words longer than this encode as [UNK] (BERT's cap, scaled)
 UNK = "[UNK]"
@@ -147,7 +148,8 @@ def wordpiece_train(
             .localCheckpoint(eager=True)
         )
     if not rounds:
-        empty = words.sparkSession.createDataFrame(
+        empty = local_frame(
+            words.sparkSession,
             [],
             "rank int, lhs string, rhs string, merged string, "
             "pair_count bigint, score double",

@@ -23,13 +23,21 @@ Scale notes (100 TB / 1000 executors):
   split on skew. The trade-off: a consumer that relied on a cached
   frame's hash partitioning may pay one extra exchange. Results cannot
   change, only partition counts move.
+- Rows the driver already holds enter Spark through ``local_frame``, as
+  an Arrow-built local relation planned in the JVM. In classic PySpark
+  ``createDataFrame(<list>)`` is ``sc.parallelize`` plus a PythonRDD:
+  every read of that frame starts a Python worker and re-runs the
+  conversion. ``tests/test_local_frame.py`` walks ``operators/`` and
+  ``sources/`` and fails on any other ``createDataFrame`` call.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 DEFAULT_APP_NAME = "azure-etl-spark"
 CACHED_PLAN_REPARTITION = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
@@ -89,3 +97,64 @@ def configure_for_oracle(spark: SparkSession) -> SparkSession:
     except Exception:
         pass  # older/newer Spark without the legacy knob
     return spark
+
+
+# Spark types whose Python values convert through Arrow exactly as the
+# list path converts them. Timestamps are not among them: the list path
+# reads a naive datetime in the Python process's local zone, Arrow reads
+# it as UTC.
+LOCAL_FRAME_TYPES = (
+    T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+    T.FloatType, T.DoubleType, T.DecimalType, T.StringType, T.BinaryType,
+    T.DateType,
+)
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """Driver-held rows as a JVM local relation.
+
+    ``rows`` are tuples in ``schema`` field order; ``schema`` is a
+    ``StructType`` or a DDL string. The rows are packed into a
+    ``pyarrow.Table``, which ``createDataFrame`` always takes through
+    Arrow whatever the session's Arrow conf: Spark plans it as a
+    ``LocalRelation`` (a JVM RDD above
+    ``spark.sql.execution.arrow.localRelationThreshold``), so reading
+    it needs no Python worker and nothing re-runs per read.
+
+    Values must reproduce exactly what ``createDataFrame(rows, schema)``
+    would hold: a non-empty ``rows`` with a field outside
+    ``LOCAL_FRAME_TYPES``, a row that is not a plain tuple of the
+    schema's width, a NULL in a non-nullable field, or a value Arrow
+    cannot convert losslessly (a decimal with excess scale) raises. An
+    empty ``rows`` works for any schema.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    rows = list(rows)
+    arrow_schema = to_arrow_schema(schema)
+    width = len(schema.fields)
+    if rows:
+        inexact = [
+            f"{f.name} {f.dataType.simpleString()}"
+            for f in schema.fields
+            if not isinstance(f.dataType, LOCAL_FRAME_TYPES)
+        ]
+        if inexact:
+            raise TypeError(f"local_frame cannot hold {', '.join(inexact)} exactly")
+        for r in rows:
+            if type(r) is not tuple or len(r) != width:
+                raise TypeError(
+                    f"local_frame rows must be plain {width}-tuples, got {r!r}"
+                )
+    columns = list(zip(*rows)) if rows else [()] * width
+    arrays = [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)]
+    for f, a in zip(schema.fields, arrays):
+        if not f.nullable and a.null_count:
+            raise ValueError(f"field {f.name} is not nullable but holds NULL")
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

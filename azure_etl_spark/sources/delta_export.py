@@ -61,6 +61,8 @@ from urllib.parse import quote, unquote
 
 from pyspark.sql import SparkSession
 
+from azure_etl_spark.session import local_frame
+
 from .snapshot import (
     DATA_DIR,
     DELETES_DIR,
@@ -2190,7 +2192,7 @@ def read_delta_log_table(
             {v: k for k, v in log2phys.items()},
         )
     if not live:
-        return spark.createDataFrame([], logical)
+        return local_frame(spark, [], logical)
     if cm_mode == "id":
         # after pruning: only the files the scan will actually read
         # pay the footer verification
@@ -2232,7 +2234,7 @@ def read_delta_log_table(
             [T.StructField("__dlt_file", T.StringType())]
             + [T.StructField(f"__pv_{c}", T.StringType()) for c in pcols]
         )
-        dim = spark.createDataFrame(rows, dim_schema)
+        dim = local_frame(spark, rows, dim_schema)
         df = df.join(F.broadcast(dim), "__dlt_file")
         for c in pcols:
             df = df.withColumn(c, F.col(f"__pv_{c}").cast(ptypes[c])).drop(
@@ -2261,9 +2263,7 @@ def read_delta_log_table(
                 for f, dv in dv_by_file.items()
                 for p in _decode_deletion_vector(spark, path, dv)
             ]
-            dvdf = spark.createDataFrame(
-                dv_rows, "__dlt_file string, __dlt_pos long"
-            )
+            dvdf = local_frame(spark, dv_rows, "__dlt_file string, __dlt_pos long")
             df = df.join(
                 F.broadcast(dvdf), ["__dlt_file", "__dlt_pos"], "left_anti"
             )
@@ -3018,7 +3018,7 @@ def table_changes(
              T.StructField("__cdf_ct", T.StringType())]
             + [T.StructField(f"__pv_{c}", T.StringType()) for c in pcols_all]
         )
-        dim = spark.createDataFrame(dim_rows, dim_schema)
+        dim = local_frame(spark, dim_rows, dim_schema)
         return df.withColumn("__cdf_file", _file_key_col()).join(
             F.broadcast(dim), "__cdf_file"
         )
@@ -3067,9 +3067,7 @@ def table_changes(
         df = spark.read.parquet(f"{root}/{rel}")
         pos = _decode_deletion_vector(spark, path, dv)
         if pos:
-            pdf = spark.createDataFrame(
-                [(int(p),) for p in pos], "___pos long"
-            )
+            pdf = local_frame(spark, [(int(p),) for p in pos], "___pos long")
             df = (
                 df.withColumn("___pos", F.col("_metadata.row_index"))
                 .join(F.broadcast(pdf), on="___pos", how="left_anti")

@@ -24,6 +24,8 @@ from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from azure_etl_spark.session import local_frame
+
 # Driver fixture tables (TESTDATA.md); the engine's tests and the
 # correctness oracle all read these.
 TABLES = (
@@ -136,18 +138,50 @@ def ensure_min_partitions(df: DataFrame, min_partitions: int | None = None) -> D
     repaid many times over by parallelizing the downstream map work.
     (Same pattern as repartitioning after reading a few large gzip
     files — an unsplittable-input fix, not a tuning knob.)
+
+    The probe never runs a job. A plan whose partition count is only
+    known by executing it (exchanges, subqueries, an unfilled cache) is
+    returned unchanged: its exchanges already parallelize at scale.
     """
     spark = df.sparkSession
     if min_partitions is None:
         min_partitions = spark.sparkContext.defaultParallelism
-    # JVM-side partition probe: df.rdd would wrap the plan in a Python
-    # Row-deserializer conversion on every call (a library path every
-    # documents query traverses); queryExecution().toRdd() plans the
-    # same partitioning without that wrapper and runs no job.
-    n_parts = df._jdf.queryExecution().toRdd().getNumPartitions()
-    if n_parts < min_partitions:
+    n_parts = _planned_partitions(df)
+    if n_parts is not None and n_parts < min_partitions:
         return df.repartition(min_partitions)
     return df
+
+
+def _planned_partitions(df: DataFrame) -> int | None:
+    """Partition count of ``df``'s physical plan, or None when reading
+    it would run a job.
+
+    ``queryExecution().toRdd()`` plans the partitioning JVM-side (unlike
+    ``df.rdd``, which wraps the plan in a Python Row conversion). It is
+    job-free only when the plan holds no exchange, no subquery and no
+    unfilled cache: an adaptive plan executes its query stages to build
+    the RDD, a broadcast or subquery runs its own job, and an unfilled
+    cache executes its plan. A scan of a filled cache qualifies even
+    under an adaptive wrapper.
+    """
+    qe = df._jdf.queryExecution()
+    stack = [qe.executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":  # a leaf wrapping the plan it runs
+            stack.append(node.executedPlan())
+            continue
+        if "Exchange" in name or not node.subqueries().isEmpty():
+            return None
+        if (
+            name == "InMemoryTableScan"
+            and not node.relation().cacheBuilder().isCachedColumnBuffersLoaded()
+        ):
+            return None
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return qe.toRdd().getNumPartitions()
 
 
 def load_tables(
@@ -346,6 +380,4 @@ def list_files(spark: SparkSession, path: str, glob: str = "*") -> DataFrame:
         (st.getPath().toString(), int(st.getLen()), int(st.getModificationTime()))
         for st in fs.globStatus(pattern) or []
     ]
-    return spark.createDataFrame(
-        rows, "path string, length long, modification_time long"
-    )
+    return local_frame(spark, rows, "path string, length long, modification_time long")

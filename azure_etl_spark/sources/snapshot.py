@@ -102,6 +102,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from azure_etl_spark.session import local_frame
+
 MANIFEST_DIR = "_manifest"
 DATA_DIR = "data"
 DELETES_DIR = "deletes"  # parquet key files for merge-on-read equality deletes
@@ -2295,7 +2297,8 @@ def snapshot_history(spark: SparkSession, path: str) -> DataFrame:
             _load_manifest(spark, path, v) for v in _list_versions(spark, path)
         )
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "version int, mode string, operation string, n_data_dirs int, "
         "n_kept_files int, committed_at_unix double",

@@ -2014,6 +2014,8 @@ def test_read_delta_log_table_dv_executor_side(spark, tmp_path):
 
     fast = read_delta_log_table(spark, dst)  # default budget: broadcast
     assert "MapInPandas" not in fast._jdf.queryExecution().executedPlan().toString()
+    # the broadcast positions are a JVM local relation, not a PythonRDD
+    assert "ExistingRDD" not in fast._jdf.queryExecution().optimizedPlan().toString()
     assert sorted((r["k"], r["grp"], r["amount"]) for r in fast.collect()) == want
 
     scale = read_delta_log_table(spark, dst, dv_broadcast_max_positions=0)
