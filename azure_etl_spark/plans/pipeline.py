@@ -26,6 +26,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from azure_etl_spark.operators.aggregate import grouped_min_max
 from azure_etl_spark.operators.dedup import distinct_rows
@@ -52,6 +53,9 @@ class MedallionPipeline:
     # default, opt-in for callers that add their own second action.
     cache_silver: bool = False
     results: dict[str, object] = field(default_factory=dict)
+    # schema each layer was written with, so reading it back needs no
+    # inference job; a layer this object did not write infers as usual
+    written: dict[str, StructType] = field(default_factory=dict)
 
     def path(self, layer: str) -> str:
         return os.path.join(self.root, layer)
@@ -62,6 +66,7 @@ class MedallionPipeline:
         """Raw snapshot union lands as-is in bronze parquet (the ADF
         copy, datafactory.tf:36-43)."""
         write_parquet(raw, self.path("bronze"))
+        self.written["bronze"] = raw.schema
         return raw
 
     def bronze_to_silver(self, spark: SparkSession) -> DataFrame:
@@ -75,7 +80,8 @@ class MedallionPipeline:
         obs = Observation("silver_quality")
         from azure_etl_spark.operators.dedup import distinct_sorted
 
-        df = distinct_sorted(read_parquet(spark, self.path("bronze")), [self.key])
+        bronze = read_parquet(spark, self.path("bronze"), self.written.get("bronze"))
+        df = distinct_sorted(bronze, [self.key])
         df = df.observe(
             obs,
             F.count(F.lit(1)).alias("rows"),
@@ -84,13 +90,14 @@ class MedallionPipeline:
         if self.cache_silver:
             df = df.cache()
         write_parquet(df, self.path("silver"))
+        self.written["silver"] = df.schema
         self.results["silver_metrics"] = dict(obs.get)
         return df
 
     def silver_to_gold(self, spark: SparkSession) -> DataFrame:
         """silverToGold.scala: grouped min/max + difference + date parts,
         written partitioned by year/month/day."""
-        silver = read_parquet(spark, self.path("silver"))
+        silver = read_parquet(spark, self.path("silver"), self.written.get("silver"))
         gold = grouped_min_max(
             silver,
             keys=[self.key],

@@ -29,6 +29,16 @@ Scale notes (100 TB / 1000 executors):
   every read of that frame starts a Python worker and re-runs the
   conversion. ``tests/test_local_frame.py`` walks ``operators/`` and
   ``sources/`` and fails on any other ``createDataFrame`` call.
+- ``spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS``: Spark's
+  default still writes ``TIMESTAMP`` as INT96, a deprecated encoding
+  that carries no Parquet statistics. Only legacy readers (Impala,
+  Hive before 3, old parquet-mr) need INT96; every current reader,
+  Spark, Delta, DuckDB and Arrow included, reads INT64 micros. With
+  micros, snapshot commits take timestamp min/max from the footers
+  (``sources/snapshot._collect_file_stats``) instead of an aggregate
+  job over the files just written. A session the engine did not build
+  still writes INT96; those columns fall back to the aggregate, so
+  stats are the same either way.
 """
 
 from __future__ import annotations
@@ -41,6 +51,7 @@ from pyspark.sql import types as T
 
 DEFAULT_APP_NAME = "azure-etl-spark"
 CACHED_PLAN_REPARTITION = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+PARQUET_TIMESTAMP_TYPE = "spark.sql.parquet.outputTimestampType"
 
 
 def session_builder(
@@ -62,6 +73,7 @@ def session_builder(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config(CACHED_PLAN_REPARTITION, "true")
+        .config(PARQUET_TIMESTAMP_TYPE, "TIMESTAMP_MICROS")
         # runtime bloom-filter semi-join pruning: a selective dim filter
         # builds a bloom filter that prunes the fact scan BEFORE its
         # shuffle — off by default in Spark, a large win for shuffle

@@ -69,6 +69,8 @@ from .snapshot import (
     MANIFEST_DIR,
     SnapshotConflictError,
     SnapshotVersionError,
+    _data_schema,
+    _footer_stats,
     _fs,
     _jpath,
     _list_versions,
@@ -254,7 +256,10 @@ def _dv_state(spark: SparkSession, path: str, manifest: dict) -> dict:
 
     root = path.rstrip("/")
     covered = sorted({f for e in entries for f in e["files"]})
-    df = _read_files(spark, root, covered, with_positions=True)
+    df = _read_files(
+        spark, root, covered, with_positions=True,
+        schemas=manifest.get("dir_schemas"),
+    )
     matched = None
     for e in entries:
         # entry file lists are manifest (URI-encoded) names; the scan's
@@ -489,20 +494,6 @@ def _file_meta(spark: SparkSession, path: str, rel_files: list[str]) -> dict:
                 rel = p.split(prefix, 1)[1]
                 meta[rel] = (int(st.getLen()), int(st.getModificationTime()))
     return meta
-
-
-def _parquet_num_rows(spark: SparkSession, path: str, rel: str) -> int:
-    """Physical row count of one data file from its parquet FOOTER —
-    metadata-only, no data pages read. Needed when a DV-carrying add
-    has no collected stats (the protocol requires numRecords there)."""
-    import pyarrow.parquet as pq
-
-    fs, jvm = _fs(spark, path)
-    return int(
-        pq.ParquetFile(
-            _local_path(fs, _jpath(jvm, path, rel))
-        ).metadata.num_rows
-    )
 
 
 def _delta_stats(
@@ -1072,7 +1063,10 @@ def export_delta_log(
                 # readers never answer from a deleted row
                 st = json.loads(st_json) if st_json else {}
                 if st.get("numRecords") is None:
-                    st["numRecords"] = _parquet_num_rows(spark, path, unquote(f))
+                    # the PHYSICAL count, from the file's footer
+                    dfs, djvm = _fs(spark, path)
+                    local = _local_path(dfs, _jpath(djvm, path, unquote(f)))
+                    st["numRecords"] = _footer_stats(local, [])[0]
                 st["tightBounds"] = False
                 add["stats"] = json.dumps(st, sort_keys=True)
                 add["deletionVector"] = dv_descr[unquote(f)]
@@ -2622,15 +2616,19 @@ def convert_from_delta_log(spark: SparkSession, path: str) -> int:
         finally:
             stream.close()
         _rename_map_cache[root] = sidecar
+    # the one schema inference the adopted dir ever needs: the manifest
+    # records it, and every later read is pinned to it
+    dir_schemas = {}
+    if state["live"] or not cm_active:
+        inferred = spark.read.option("basePath", f"{root}/{data_rel}").parquet(
+            f"{root}/{data_rel}"
+        )
+        dir_schemas[data_rel] = _data_schema(inferred, pcols)
     if cm_active:
         schema_fields = json.loads(state["schema_string"])["fields"]
         columns = [f["name"] for f in schema_fields]
     else:
-        columns = list(
-            spark.read.option("basePath", f"{root}/{data_rel}")
-            .parquet(f"{root}/{data_rel}")
-            .columns
-        )
+        columns = list(inferred.columns)
     # constraints ride the migration: Delta CHECK constraints live in
     # metaData configuration (delta.constraints.<name>), NOT NULL as
     # nullable=false schema fields (logical names either way) — they
@@ -2669,6 +2667,7 @@ def convert_from_delta_log(spark: SparkSession, path: str) -> int:
         "mode": "convert",
         "operation": "convert_from_delta",
         "data_dirs": [data_rel],
+        "dir_schemas": dir_schemas,
         "data_files": [],
         "partition_by": pcols,
         "committed_at_unix": _time.time(),

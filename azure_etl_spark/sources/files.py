@@ -23,6 +23,7 @@ import os
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from azure_etl_spark.session import local_frame
 
@@ -49,9 +50,14 @@ except Exception:  # pragma: no cover
     HAVE_DELTA = False
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet scan. Globs allowed; filter/column pushdown comes free."""
-    return spark.read.parquet(path)
+def read_parquet(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame:
+    """Parquet scan. Globs allowed; filter/column pushdown comes free.
+    ``schema`` (the writer's, when the caller wrote ``path`` itself)
+    skips schema inference, a one-task Spark job over the footers."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 # (applicationId, abs sf_dir, table) -> unresolved DataFrame. The

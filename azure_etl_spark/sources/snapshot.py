@@ -32,9 +32,10 @@ Protocol (a deliberately minimal version of the Delta log):
 
 Round-5 extensions (Delta-parity DML on the same log protocol):
 
-- **Per-file min/max stats** (``manifest["stats"]``): one extra pass
-  over each *newly written* data dir groups by ``input_file_name`` and
-  records row count + min/max per atomic-typed column — the same
+- **Per-file min/max stats** (``manifest["stats"]``): row count +
+  min/max per atomic-typed column of each *newly written* file, read
+  from its Parquet footer (an aggregate pass grouped by
+  ``input_file_name`` covers what a footer cannot vouch for) — the same
   metadata Delta keeps in its log. Readers prune files whose
   [min, max] interval cannot satisfy a conjunctive predicate
   (:func:`read_snapshot` ``where=``), so a selective scan of a 100 TB
@@ -94,6 +95,7 @@ from __future__ import annotations
 import datetime as _dt
 import decimal as _decimal
 import json
+import math
 import re
 import time
 import uuid
@@ -340,14 +342,280 @@ def _list_parquet_files(spark: SparkSession, root: str, rel_dir: str) -> list[st
     return sorted(out)
 
 
+def _data_schema(df: DataFrame, partition_by: list[str] | None) -> dict:
+    """The schema a data dir's files carry, as recorded in the manifest
+    (``dir_schemas``): ``df``'s fields minus the partition columns,
+    every field nullable. This is what schema inference reads back from
+    the footer Spark writes, so a read pinned to it plans the same
+    relation without inference's footer job; the partition columns are
+    still derived from the paths."""
+    drop = set(partition_by or [])
+    return T.StructType(
+        [
+            T.StructField(f.name, f.dataType, True, f.metadata)
+            for f in df.schema.fields
+            if f.name not in drop
+        ]
+    ).jsonValue()
+
+
+def _dir_reader(spark: SparkSession, root: str, rel_dir: str, schemas: dict | None):
+    """A parquet reader rooted at one data dir (``basePath`` keeps its
+    Hive partition columns), pinned to the dir's recorded schema when
+    the manifest has one; dirs committed before schemas were recorded
+    infer as before."""
+    reader = spark.read.option("basePath", f"{root}/{rel_dir}")
+    schema = (schemas or {}).get(rel_dir)
+    return reader.schema(T.StructType.fromJson(schema)) if schema else reader
+
+
+def _live_schemas(schemas: dict | None, data_dirs: list[str], data_files: list[str]) -> dict:
+    """``schemas`` narrowed to the dirs a manifest still reads: its data
+    dirs plus the base dirs of its explicit files."""
+    live = set(data_dirs) | {_base_dir_of(f) for f in data_files}
+    return {d: s for d, s in (schemas or {}).items() if d in live}
+
+
+def _stats_key(uri: str, root: str) -> str:
+    """Manifest stats key of a data file: its URI with the scheme and
+    the table root stripped (the URI-encoded form, see ``_read_files``)."""
+    fpath = re.sub(r"^[a-z0-9+.-]+://?", "/", uri).replace("//", "/")
+    prefix = f"{root.rstrip('/')}/"
+    return fpath.split(prefix, 1)[1] if prefix in fpath else fpath
+
+
+# parquet-mr releases whose float/double footer statistics follow a
+# total order with NaN above every number and -0.0 below 0.0 (pinned by
+# tests/test_footer_stats.py); older writers' float stats are not
+# trusted
+_FLOAT_STATS_SINCE = (1, 16)
+_PARQUET_MR_RE = re.compile(r"parquet-mr version (\d+)\.(\d+)")
+
+
+class _Unvouched(Exception):
+    """A footer statistic that cannot stand in for the aggregate."""
+
+
+def _order_key(v):
+    # the footer's total order: NaN above every number, -0.0 below 0.0
+    if isinstance(v, float):
+        return (v != v, v, math.copysign(1.0, v))
+    return (False, v)
+
+
+def _signed_zero(v, sign: float) -> bool:
+    return isinstance(v, float) and v == 0.0 and math.copysign(1.0, v) == sign
+
+
+def _footer_value(raw, dtype: T.DataType, column):
+    """One raw footer min/max as the value Spark's aggregate would
+    collect, in an order-preserving form (dates and timestamps stay
+    integers until the fold is done)."""
+    if column.converted_type.startswith("UINT"):
+        raise _Unvouched  # unsigned order; Spark widens the type
+    if isinstance(dtype, T.DecimalType):
+        if isinstance(raw, bytes):
+            raw = int.from_bytes(raw, "big", signed=True)
+        return _decimal.Decimal(raw).scaleb(-dtype.scale)
+    if isinstance(dtype, T.StringType):
+        return raw.decode("utf-8") if isinstance(raw, bytes) else raw
+    if isinstance(dtype, T.TimestampType):
+        unit = {"TIMESTAMP_MICROS": 1, "TIMESTAMP_MILLIS": 1000}.get(
+            column.converted_type
+        )
+        if unit is None:
+            raise _Unvouched
+        return raw * unit
+    return raw
+
+
+def _spark_value(v, dtype: T.DataType):
+    if isinstance(dtype, (T.DateType, T.TimestampType)):
+        return dtype.fromInternal(v)
+    return v
+
+
+def _footer_stats(local_path: str, fields: list[T.StructField]) -> tuple[int, dict, dict, set]:
+    """Row count and per-column min/max of one Parquet file, folded over
+    its row groups from the footer alone (pyarrow on the driver: no data
+    page is read and no Spark job runs). Returns ``(rows, mins, maxs,
+    unvouched)``; ``unvouched`` names the ``fields`` whose footer cannot
+    stand in for Spark's ``min``/``max``: INT96 (no statistics),
+    unsigned integers (foreign writers), a chunk without min/max
+    (parquet-java drops binary statistics over 4 KB), float statistics
+    from an older writer, or a float column that may hold both -0.0 and
+    0.0. Spark's order ties the two zeros and its
+    aggregate keeps the first one it meets, while the footer orders
+    -0.0 first: a footer min of -0.0 is exact only when the max is -0.0
+    too, a max of 0.0 only when the min is 0.0 too."""
+    import pyarrow.parquet as pq
+
+    meta = pq.read_metadata(local_path)
+    writer = _PARQUET_MR_RE.match(meta.created_by or "")
+    float_ok = bool(writer) and tuple(map(int, writer.groups())) >= _FLOAT_STATS_SINCE
+    index = {meta.schema.column(i).path: i for i in range(meta.num_columns)}
+    mins: dict = {}
+    maxs: dict = {}
+    unvouched: set[str] = set()
+    for f in fields:
+        i = index.get(f.name)
+        floating = isinstance(f.dataType, (T.FloatType, T.DoubleType))
+        lo = hi = None
+        try:
+            if i is None or (floating and not float_ok):
+                raise _Unvouched
+            column = meta.schema.column(i)
+            for g in range(meta.num_row_groups):
+                chunk = meta.row_group(g).column(i)
+                st = chunk.statistics
+                if st is None:
+                    raise _Unvouched
+                if st.has_null_count and st.null_count == chunk.num_values:
+                    continue  # all-null chunk: no bound
+                if not st.has_min_max:
+                    raise _Unvouched
+                a = _footer_value(st.min_raw, f.dataType, column)
+                b = _footer_value(st.max_raw, f.dataType, column)
+                if lo is None or _order_key(a) < _order_key(lo):
+                    lo = a
+                if hi is None or _order_key(hi) < _order_key(b):
+                    hi = b
+            if (_signed_zero(lo, -1.0) and not _signed_zero(hi, -1.0)) or (
+                _signed_zero(hi, 1.0) and not _signed_zero(lo, 1.0)
+            ):
+                raise _Unvouched
+        except (_Unvouched, UnicodeDecodeError):
+            unvouched.add(f.name)
+            continue
+        if lo is not None:
+            mins[f.name] = _spark_value(lo, f.dataType)
+            maxs[f.name] = _spark_value(hi, f.dataType)
+    return meta.num_rows, mins, maxs, unvouched
+
+
+_PARTITION_VALUE = {
+    T.IntegerType: int,
+    T.LongType: int,
+    T.DoubleType: float,
+    T.StringType: str,
+    T.DecimalType: _decimal.Decimal,
+    T.DateType: _dt.date.fromisoformat,
+}
+
+
+def _partition_stats(rel: str, fields: list[T.StructField]) -> tuple[dict, set]:
+    """A file's partition values from its ``col=value`` path segments,
+    typed as partition discovery typed the column; a column of a type
+    parsed here only by Spark (timestamps) is returned unvouched."""
+    from urllib.parse import unquote
+
+    raw = {}
+    for seg in rel.split("/")[:-1]:
+        k, eq, v = seg.partition("=")
+        if eq:
+            raw[unquote(k)] = unquote(v)
+    vals: dict = {}
+    unvouched: set[str] = set()
+    for f in fields:
+        parse = _PARTITION_VALUE.get(type(f.dataType))
+        v = raw.get(f.name)
+        if v == "__HIVE_DEFAULT_PARTITION__":
+            continue
+        try:
+            vals[f.name] = parse(v)
+        except (TypeError, ValueError, _decimal.InvalidOperation):
+            unvouched.add(f.name)
+    return vals, unvouched
+
+
+def _local_root(spark: SparkSession, root: str) -> str | None:
+    """``root`` as a plain local path, or None on a non-local filesystem."""
+    fs, jvm = _fs(spark, root)
+    uri = fs.makeQualified(_jpath(jvm, root)).toUri()
+    return uri.getPath() if uri.getScheme() in (None, "file") else None
+
+
 def _collect_file_stats(
-    spark: SparkSession, root: str, rel_dir: str, bloom: dict | None = None
+    spark: SparkSession,
+    root: str,
+    rel_dir: str,
+    schema: dict,
+    bloom: dict | None = None,
 ) -> dict[str, dict]:
-    """One pass over a newly written data dir: per-file row count and
-    min/max for every atomic-typed column (partition columns included —
-    Hive-dir discovery surfaces them as constant per file). This is the
-    same per-file metadata Delta records in its log, and the input to
-    all file skipping below.
+    """Per-file row count and min/max for every atomic-typed column of a
+    newly written data dir (partition columns included, constant per
+    file), plus the optional per-file Bloom filters — the same per-file
+    metadata Delta records in its log, and the input to all file
+    skipping below. ``schema`` is the dir's recorded data schema.
+
+    On a local filesystem the row counts and bounds come from each
+    file's Parquet footer (``_footer_stats``) and the partition values
+    from its path, with no Spark job. ``_aggregate_file_stats`` — one
+    aggregate pass over the dir, read with the known schema — covers
+    only what the footers cannot: Bloom columns and unvouched columns.
+    On other filesystems the aggregate covers every column (the footer
+    reader is pyarrow on local paths). Both give byte-identical stats
+    (pinned by tests/test_footer_stats.py)."""
+    df = _dir_reader(spark, root, rel_dir, {rel_dir: schema}).parquet(f"{root}/{rel_dir}")
+    data_names = {f["name"] for f in schema["fields"]}
+    fields = [f for f in df.schema.fields if isinstance(f.dataType, _STATS_TYPES)]
+    cols = [f.name for f in fields]
+    local = _local_root(spark, root)
+    if local is None:
+        return _aggregate_file_stats(spark, df, root, cols, bloom)
+    fs, jvm = _fs(spark, root)
+    stats: dict[str, dict] = {}
+    fallback: set[str] = set()
+    it = fs.listFiles(_jpath(jvm, root, rel_dir), True)
+    while it.hasNext():
+        uri = it.next().getPath().toUri()
+        path = uri.getPath()
+        name = path.rsplit("/", 1)[-1]
+        if not name.endswith(".parquet") or name.startswith(("_", ".")):
+            continue
+        rows, mins, maxs, unvouched = _footer_stats(
+            path, [f for f in fields if f.name in data_names]
+        )
+        if not rows:
+            continue  # the aggregate groups rows; an empty file has none
+        consts, unparsed = _partition_stats(
+            path[len(local.rstrip("/")) + 1:],
+            [f for f in fields if f.name not in data_names],
+        )
+        fallback |= unvouched | unparsed
+        stats[_stats_key(uri.toString(), root)] = {
+            "rows": rows,
+            "min": {**mins, **consts},
+            "max": {**maxs, **consts},
+        }
+    bloom_cols = [c for c in (bloom or {}).get("cols", []) if c in df.columns]
+    if fallback or bloom_cols:
+        extra = _aggregate_file_stats(
+            spark, df, root, [c for c in cols if c in fallback], bloom
+        )
+        for key, st in stats.items():
+            agg = extra.get(key, {"min": {}, "max": {}})
+            for side in ("min", "max"):
+                for c in fallback:
+                    st[side].pop(c, None)
+                st[side].update(agg[side])
+            if "bloom" in agg:
+                st["bloom"] = agg["bloom"]
+    for st in stats.values():
+        for side in ("min", "max"):
+            st[side] = {c: _json_safe(st[side][c]) for c in cols if c in st[side]}
+    return stats
+
+
+def _aggregate_file_stats(
+    spark: SparkSession,
+    df: DataFrame,
+    root: str,
+    cols: list[str],
+    bloom: dict | None = None,
+) -> dict[str, dict]:
+    """One aggregate pass over a data dir's frame ``df``, grouped by
+    input file: row count and min/max of ``cols``.
 
     ``bloom`` (``{"cols": [...], "bits": m, "hashes": k}``) additionally
     folds a per-file Bloom filter per listed column into the SAME
@@ -358,8 +626,6 @@ def _collect_file_stats(
     lookups on high-cardinality columns whose [min,max] interval spans
     every file (the case clustering can't fix for more than one column)
     then skip files whose filter provably lacks the value."""
-    df = spark.read.option("basePath", f"{root}/{rel_dir}").parquet(f"{root}/{rel_dir}")
-    cols = _stats_columns(df)
     aggs = [F.count(F.lit(1)).alias("__rows")]
     for c in cols:
         aggs.append(F.min(c).alias(f"__min_{c}"))
@@ -386,14 +652,10 @@ def _collect_file_stats(
                 ).alias(f"__bloom_{c}")
             )
     rows = df.groupBy(F.input_file_name().alias("__file")).agg(*aggs).collect()
-    prefix = f"{root.rstrip('/')}/"
     stats: dict[str, dict] = {}
     for r in rows:
         d = r.asDict()
-        fpath = d["__file"]
-        # input_file_name returns a URI (file:///...); strip scheme+root
-        fpath = re.sub(r"^[a-z0-9+.-]+://?", "/", fpath).replace("//", "/")
-        rel = fpath.split(prefix, 1)[1] if prefix in fpath else fpath
+        rel = _stats_key(d["__file"], root)
         stats[rel] = {
             "rows": d["__rows"],
             "min": {c: _json_safe(d[f"__min_{c}"]) for c in cols
@@ -882,7 +1144,7 @@ _POS_IDX_COL = "__snap_pos"
 
 def _read_files(
     spark: SparkSession, root: str, rel_files: list[str],
-    with_positions: bool = False,
+    with_positions: bool = False, schemas: dict | None = None,
 ) -> DataFrame:
     """Read an explicit file subset, grouping by data/vN base so Hive
     partition columns survive (``basePath`` per group).
@@ -896,7 +1158,11 @@ def _read_files(
     and within-file row index (the physical positions Delta deletion
     vectors address) from the scan's ``_metadata`` column — it must
     happen HERE, per file-source scan, because metadata columns do not
-    propagate through the union."""
+    propagate through the union.
+
+    ``schemas`` is the manifest's ``dir_schemas``: each group whose base
+    dir has a recorded schema reads pinned to it, with no inference
+    job."""
     from urllib.parse import unquote as _unq
 
     groups: dict[str, list[str]] = {}
@@ -910,7 +1176,7 @@ def _read_files(
         # reader wants the literal path, so decode here — and position
         # matching stays in ENCODED space because _metadata.file_path
         # is a URI too
-        part = spark.read.option("basePath", f"{root}/{base}").parquet(
+        part = _dir_reader(spark, root, base, schemas).parquet(
             *[f"{root}/{_unq(f)}" for f in fl]
         )
         if with_positions:
@@ -965,12 +1231,18 @@ def _apply_delete_entry(
     return df.join(keys, on=list(entry["key_cols"]), how="left_anti")
 
 
+_POSITIONS_SCHEMA = "file string, pos bigint"
+
+
 def _read_positions(spark: SparkSession, root: str, entry: dict) -> DataFrame:
     """A positional delete entry's sidecar, aligned to the scan-time
     position column names. No dedup: semi/anti joins are insensitive to
     build-side duplicates, and skipping the aggregate keeps the sidecar
     a plain tiny scan that Spark broadcasts statically."""
-    return spark.read.parquet(f"{root}/{entry['positions_dir']}").select(
+    # every sidecar is written by _write_positions_parquet: no inference
+    return spark.read.schema(_POSITIONS_SCHEMA).parquet(
+        f"{root}/{entry['positions_dir']}"
+    ).select(
         F.col("file").alias(_POS_FILE_COL),
         F.col("pos").alias(_POS_IDX_COL),
     )
@@ -986,8 +1258,9 @@ def _read_with_deletes(
     proportional to the covered-file count — uncovered files pay
     nothing."""
     entries = manifest.get("deletes", [])
+    schemas = manifest.get("dir_schemas")
     if not entries:
-        return _read_files(spark, root, rel_files)
+        return _read_files(spark, root, rel_files, schemas=schemas)
     covers = {e["id"]: set(e["files"]) for e in entries}
     by_id = {e["id"]: e for e in entries}
     groups: dict[tuple, list[str]] = {}
@@ -1000,7 +1273,9 @@ def _read_with_deletes(
         # materializes them up front; delete entries commute (each is a
         # set subtraction), so mixing kinds in any order stays exact
         needs_pos = any("positions_dir" in by_id[i] for i in key)
-        part = _read_files(spark, root, fl, with_positions=needs_pos)
+        part = _read_files(
+            spark, root, fl, with_positions=needs_pos, schemas=schemas
+        )
         for i in key:  # id order == commit order
             part = _apply_delete_entry(spark, root, part, by_id[i])
         if needs_pos:
@@ -1105,11 +1380,18 @@ def write_snapshot(
     lists the parent version's dirs plus the new one. Returns the
     committed version number.
 
-    ``collect_stats`` (default on) records per-file min/max for file
-    skipping — one extra scan of the *new* data only.
+    ``collect_stats`` (default on) records per-file row counts and
+    min/max for file skipping. On a local filesystem they come from the
+    new files' Parquet footers, read on the driver with no Spark job;
+    columns a footer cannot vouch for (INT96 timestamps, binary values
+    over 4 KB) and Bloom columns take one aggregate pass over the *new*
+    data only, covering just those columns. Other filesystems take that
+    pass for every column. The manifest also records the new dir's
+    schema (``dir_schemas``), so every later read of it skips schema
+    inference.
 
-    ``bloom_cols`` opts columns into per-file Bloom filters (inside the
-    same stats pass; ~``bloom_bits``/8 bytes of manifest per file per
+    ``bloom_cols`` opts columns into per-file Bloom filters (built by
+    that aggregate pass; ~``bloom_bits``/8 bytes of manifest per file per
     column), arming equality-lookup file skipping on columns min/max
     can't prune. The setting is table metadata: once set it rides the
     manifest forward, so appends and COW rewrites keep collecting
@@ -1129,6 +1411,7 @@ def write_snapshot(
     if cluster_by:
         df = _cluster_for_skipping(df, cluster_by, cluster_files, cluster_mode)
     spark = df.sparkSession
+    data_schema = _data_schema(df, partition_by)
     validated = False
     for _ in range(max_retries):
         versions = _list_versions(spark, path)
@@ -1163,6 +1446,7 @@ def write_snapshot(
         root = path.rstrip("/")
         writer.parquet(f"{root}/{data_rel}")
         dirs = [data_rel]
+        schemas = {data_rel: data_schema}
         carried_files: list[str] = []
         stats: dict[str, dict] = {}
         stats_refs: list[str] = []
@@ -1173,12 +1457,15 @@ def write_snapshot(
             else (parent.get("bloom") if parent else None)
         )
         if collect_stats:
-            new_stats = _collect_file_stats(spark, root, data_rel, bloom=bloom_cfg)
+            new_stats = _collect_file_stats(
+                spark, root, data_rel, data_schema, bloom=bloom_cfg
+            )
             if new_stats:
                 # sidecar, not inline: the manifest stays O(1) in stats
                 stats_refs = [_write_stats_ref(spark, path, new_stats)]
         if mode == "append" and parent is not None:
             dirs = parent["data_dirs"] + dirs
+            schemas = {**parent.get("dir_schemas", {}), **schemas}
             carried_files = list(parent.get("data_files", []))
             # carry the parent's stats REFS (O(refs) names, not O(files)
             # entries); legacy inline stats ride along until the next
@@ -1200,6 +1487,7 @@ def write_snapshot(
             "version": version,
             "mode": mode,
             "data_dirs": dirs,
+            "dir_schemas": schemas,
             "data_files": carried_files,
             "partition_by": list(partition_by or []),
             "committed_at_unix": time.time(),
@@ -1316,7 +1604,10 @@ def read_snapshot(
                     f"version {version} at {path} lists no data files"
                 )
             return _project(
-                _read_files(spark, root, probe).filter(F.lit(False)), manifest
+                _read_files(
+                    spark, root, probe, schemas=manifest.get("dir_schemas")
+                ).filter(F.lit(False)),
+                manifest,
             )
         return _project(
             _read_with_deletes(spark, root, rel_files, manifest).filter(
@@ -1330,16 +1621,17 @@ def read_snapshot(
             raise SnapshotVersionError(f"version {version} at {path} lists no data")
         return _project(_read_with_deletes(spark, root, files, manifest), manifest)
     out = None
+    schemas = manifest.get("dir_schemas")
     for d in manifest["data_dirs"]:
         part = _rename_physical(
             spark,
             root,
-            spark.read.option("basePath", f"{root}/{d}").parquet(f"{root}/{d}"),
+            _dir_reader(spark, root, d, schemas).parquet(f"{root}/{d}"),
         )
         out = part if out is None else out.unionByName(part, allowMissingColumns=True)
     extra = manifest.get("data_files", [])
     if extra:
-        part = _read_files(spark, root, extra)
+        part = _read_files(spark, root, extra, schemas=schemas)
         out = part if out is None else out.unionByName(part, allowMissingColumns=True)
     if out is None:
         raise SnapshotVersionError(f"version {version} at {path} lists no data")
@@ -1393,6 +1685,11 @@ def _mor_entry_changes(
     cur_entries = {e["id"]: e for e in cur_manifest.get("deletes", [])}
     prev_cov = {i: set(e["files"]) for i, e in prev_entries.items()}
     cur_cov = {i: set(e["files"]) for i, e in cur_entries.items()}
+    # a dir's schema never changes, so either side's record serves
+    schemas = {
+        **prev_manifest.get("dir_schemas", {}),
+        **cur_manifest.get("dir_schemas", {}),
+    }
     groups: dict[tuple, list[str]] = {}
     for f in shared_files:
         p = tuple(sorted(i for i, fl in prev_cov.items() if f in fl))
@@ -1413,7 +1710,9 @@ def _mor_entry_changes(
 
         if added:
             # visible-at-prev rows the new entries now cover
-            base = _read_files(spark, root, files, with_positions=needs_pos)
+            base = _read_files(
+                spark, root, files, with_positions=needs_pos, schemas=schemas
+            )
             for i in p:
                 base = _apply_delete_entry(spark, root, base, prev_entries[i])
             for i in added:
@@ -1424,7 +1723,9 @@ def _mor_entry_changes(
                 base = _apply_delete_entry(spark, root, base, cur_entries[i])
         if removed:
             # rows visible at cur that the vanished entries had hidden
-            base = _read_files(spark, root, files, with_positions=needs_pos)
+            base = _read_files(
+                spark, root, files, with_positions=needs_pos, schemas=schemas
+            )
             for i in c:
                 base = _apply_delete_entry(spark, root, base, cur_entries[i])
             for i in removed:
@@ -1639,6 +1940,7 @@ def _commit_cow(
         # O(table files)
         stats = dict(base.get("stats", {}))
         stats_refs = list(base.get("stats_refs", []))
+        schemas = {**parent.get("dir_schemas", {}), **base.get("dir_schemas", {})}
         if rewrite_df is not None:
             writer = rewrite_df.write.mode("overwrite")
             if partition_by:
@@ -1649,8 +1951,9 @@ def _commit_cow(
             # carries the untouched files
             if _list_parquet_files(spark, root, data_rel):
                 dirs = [data_rel]
+                schemas[data_rel] = _data_schema(rewrite_df, partition_by)
                 new_stats = _collect_file_stats(
-                    spark, root, data_rel, bloom=parent.get("bloom")
+                    spark, root, data_rel, schemas[data_rel], bloom=parent.get("bloom")
                 )
                 if new_stats:
                     stats_refs.append(_write_stats_ref(spark, path, new_stats))
@@ -1662,6 +1965,9 @@ def _commit_cow(
             # read them; they stay uncompacted/unmerged, exactly as if
             # the append happened after the DML)
             "data_dirs": dirs + extra_dirs,
+            "dir_schemas": _live_schemas(
+                schemas, dirs + extra_dirs, keep_files + extra_files
+            ),
             "data_files": sorted(keep_files + extra_files),
             "partition_by": partition_by,
             "committed_at_unix": time.time(),
@@ -1740,6 +2046,7 @@ def _commit_metadata(
             "mode": "overwrite",
             "operation": operation,
             "data_dirs": list(base["data_dirs"]),
+            "dir_schemas": dict(base.get("dir_schemas", {})),
             "data_files": list(base.get("data_files", [])),
             "partition_by": base.get("partition_by", []),
             "committed_at_unix": time.time(),
@@ -2064,7 +2371,11 @@ def merge_snapshot(
     else:
         # key ranges disjoint from every file: pure insert
         sample = _manifest_files(spark, path, parent)[0]
-        cols = _read_files(spark, root, sample).columns if sample else source.columns
+        cols = (
+            _read_files(spark, root, sample, schemas=parent.get("dir_schemas")).columns
+            if sample
+            else source.columns
+        )
         rewrite = None
         inserts = source
     ins = inserts.select(*cols)
@@ -2508,11 +2819,13 @@ def convert_to_snapshot(
     if moved == 0:
         fs.delete(target, True)
         raise SnapshotVersionError(f"no parquet content to convert at {path}")
+    # the one inference this dir ever needs: its result is recorded
     df = spark.read.option("basePath", f"{root}/{data_rel}").parquet(
         f"{root}/{data_rel}"
     )
+    data_schema = _data_schema(df, partition_by)
     stats = (
-        _collect_file_stats(spark, root, data_rel, bloom=None)
+        _collect_file_stats(spark, root, data_rel, data_schema)
         if collect_stats
         else {}
     )
@@ -2520,6 +2833,7 @@ def convert_to_snapshot(
         "version": 0,
         "mode": "convert",
         "data_dirs": [data_rel],
+        "dir_schemas": {data_rel: data_schema},
         "data_files": [],
         "partition_by": list(partition_by or []),
         "committed_at_unix": time.time(),
@@ -2616,6 +2930,7 @@ def stage_snapshot_commit(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(f"{root}/{data_rel}")
+    data_schema = _data_schema(df, partition_by)
     stats_refs: list[str] = []
     if collect_stats:
         # honor the table's bloom config so published files keep
@@ -2626,13 +2941,16 @@ def stage_snapshot_commit(
             if versions
             else None
         )
-        new_stats = _collect_file_stats(spark, root, data_rel, bloom=bloom_cfg)
+        new_stats = _collect_file_stats(
+            spark, root, data_rel, data_schema, bloom=bloom_cfg
+        )
         if new_stats:
             stats_refs = [_write_stats_ref(spark, path, new_stats)]
     staged = {
         "stage_id": stage_id,
         "mode": mode,
         "data_dirs": [data_rel],
+        "dir_schemas": {data_rel: data_schema},
         "partition_by": list(partition_by or []),
         "stats_refs": stats_refs,
         "columns": list(df.columns),
@@ -2647,6 +2965,11 @@ def stage_snapshot_commit(
     return stage_id
 
 
+def _staged_frame(spark: SparkSession, root: str, staged: dict) -> DataFrame:
+    (d,) = staged["data_dirs"]
+    return _dir_reader(spark, root, d, staged.get("dir_schemas")).parquet(f"{root}/{d}")
+
+
 def read_staged_snapshot(
     spark: SparkSession, path: str, stage_id: str
 ) -> DataFrame:
@@ -2657,7 +2980,7 @@ def read_staged_snapshot(
     :func:`read_snapshot` still see nothing."""
     staged = _load_staged(spark, path, stage_id)
     root = path.rstrip("/")
-    new = spark.read.parquet(*[f"{root}/{d}" for d in staged["data_dirs"]])
+    new = _staged_frame(spark, root, staged)
     if staged["mode"] == "overwrite" or not _list_versions(spark, path):
         return new
     return read_snapshot(spark, path).unionByName(new, allowMissingColumns=True)
@@ -2715,7 +3038,7 @@ def publish_staged_commit(
                 f"violations per rule {counts}; stage left intact "
                 "(discard_staged_commit to drop it)"
             )
-    staged_df = spark.read.parquet(*[f"{root}/{d}" for d in staged["data_dirs"]])
+    staged_df = _staged_frame(spark, root, staged)
     validated = False
     for _ in range(max_retries):
         versions = _list_versions(spark, path)
@@ -2735,12 +3058,14 @@ def publish_staged_commit(
                 )
         version = (versions[-1] + 1) if versions else 0
         dirs = list(staged["data_dirs"])
+        schemas = dict(staged.get("dir_schemas", {}))
         carried_files: list[str] = []
         stats: dict[str, dict] = {}
         stats_refs = list(staged.get("stats_refs", []))
         deletes: list[dict] = []
         if mode == "append" and parent is not None:
             dirs = parent["data_dirs"] + dirs
+            schemas = {**parent.get("dir_schemas", {}), **schemas}
             carried_files = list(parent.get("data_files", []))
             stats = dict(parent.get("stats", {}))
             stats_refs = parent.get("stats_refs", []) + stats_refs
@@ -2758,6 +3083,7 @@ def publish_staged_commit(
             "mode": mode,
             "operation": "wap_publish",
             "data_dirs": dirs,
+            "dir_schemas": schemas,
             "data_files": carried_files,
             "partition_by": partition_by,
             "committed_at_unix": time.time(),

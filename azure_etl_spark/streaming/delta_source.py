@@ -789,7 +789,7 @@ class DeltaLogStreamReader(DataSourceStreamReader):
     Delta log versions as the version axis and per-commit
     dataChange-add lists as the units."""
 
-    def __init__(self, options, schema):
+    def __init__(self, options, schema, default_min_partitions: int = 32):
         self.table = options["path"]
         self.ignore_changes = (
             str(options.get("ignorechanges", "false")).lower() == "true"
@@ -821,12 +821,13 @@ class DeltaLogStreamReader(DataSourceStreamReader):
         # scan-parallelism floor (mirrors spark.sql.files.minPartitionNum
         # semantics: the split budget shrinks so at least this many
         # tasks exist when the data supports it). The planning side of
-        # a Python data source cannot see the cluster's parallelism, so
-        # the default is a LOCAL-sandbox value (32 = this box's
-        # defaultParallelism); production streams on bigger clusters
-        # set minpartitionnum to their core count.
+        # a Python data source has no JVM, so the default is the
+        # cluster's defaultParallelism as resolved on the driver by
+        # ``register`` and carried in by the source class.
         mpn = options.get("minpartitionnum")
-        self.min_partition_num = int(mpn) if mpn is not None else 32
+        self.min_partition_num = (
+            int(mpn) if mpn is not None else default_min_partitions
+        )
         for name, val in (
             ("maxpartitionbytes", self.max_partition_bytes),
             ("minpartitionnum", self.min_partition_num),
@@ -1256,6 +1257,11 @@ class DeltaLogTableSource(DataSource):
     skipping); this source exists for the streaming tail, which needs
     the log's commit increments."""
 
+    # the stream's minpartitionnum default; ``register`` subclasses
+    # this with the session's defaultParallelism, so the historical 32
+    # holds only for a caller that registers this class by hand
+    default_min_partitions = 32
+
     @classmethod
     def name(cls):
         return "delta_log_table"
@@ -1297,8 +1303,25 @@ class DeltaLogTableSource(DataSource):
         )
 
     def streamReader(self, schema):
-        return DeltaLogStreamReader(self.options, schema)
+        return DeltaLogStreamReader(
+            self.options, schema, self.default_min_partitions
+        )
+
+
+def source_for(parallelism: int) -> type[DeltaLogTableSource]:
+    """``DeltaLogTableSource`` with ``minpartitionnum`` defaulting to
+    ``parallelism``. The class is built at run time, so cloudpickle
+    ships it by value, class attribute included, to the planner
+    worker, which has no JVM to ask."""
+    return type(
+        "DeltaLogTableSourceAt",
+        (DeltaLogTableSource,),
+        {"default_min_partitions": int(parallelism)},
+    )
 
 
 def register(spark) -> None:
-    spark.dataSource.register(DeltaLogTableSource)
+    """Register ``delta_log_table`` with the cluster's defaultParallelism
+    (resolved here, on the driver) as the stream's scan-parallelism
+    floor."""
+    spark.dataSource.register(source_for(spark.sparkContext.defaultParallelism))

@@ -1223,3 +1223,33 @@ def test_batch_read_of_stream_format_redirects(spark, tmp_path):
     export_delta_log(spark, src)
     with pytest.raises(Exception, match="read_delta_log_table"):
         spark.read.format("delta_log_table").option("path", src).load().count()
+
+
+def test_minpartitionnum_defaults_to_registered_parallelism(
+    spark, tmp_path, monkeypatch
+):
+    """Without the option, the scan-parallelism floor is the
+    defaultParallelism ``register`` resolved on the driver: 64 small
+    files plan to 64 partitions under a 64-way source and pack into 4
+    under a 4-way one (planned directly, no 64-core session)."""
+    path = str(tmp_path / "many")
+    write_snapshot(
+        spark.range(0, 64, 1, 64).select(F.col("id"), F.lit("t").alias("tag")),
+        path,
+    )
+    export_delta_log(spark, path)
+
+    def plan(source):
+        src = source({"path": path})
+        reader = src.streamReader(src.schema())
+        return reader.partitions(reader.initialOffset(), reader.latestOffset())
+
+    assert len(plan(delta_source.source_for(64))) == 64
+    assert len(plan(delta_source.source_for(4))) == 4
+    resolved = []
+    source_for = delta_source.source_for
+    monkeypatch.setattr(
+        delta_source, "source_for", lambda n: resolved.append(n) or source_for(n)
+    )
+    delta_source.register(spark)
+    assert resolved == [spark.sparkContext.defaultParallelism]
