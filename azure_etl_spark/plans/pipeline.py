@@ -54,8 +54,12 @@ class MedallionPipeline:
     cache_silver: bool = False
     results: dict[str, object] = field(default_factory=dict)
     # schema each layer was written with, so reading it back needs no
-    # inference job; a layer this object did not write infers as usual
-    written: dict[str, StructType] = field(default_factory=dict)
+    # inference job; a layer this object did not write infers as usual.
+    # Internal state, not a constructor option: a schema a caller passed
+    # in could disagree with the files and null out their columns.
+    _written: dict[str, StructType] = field(
+        default_factory=dict, init=False, repr=False
+    )
 
     def path(self, layer: str) -> str:
         return os.path.join(self.root, layer)
@@ -66,7 +70,7 @@ class MedallionPipeline:
         """Raw snapshot union lands as-is in bronze parquet (the ADF
         copy, datafactory.tf:36-43)."""
         write_parquet(raw, self.path("bronze"))
-        self.written["bronze"] = raw.schema
+        self._written["bronze"] = raw.schema
         return raw
 
     def bronze_to_silver(self, spark: SparkSession) -> DataFrame:
@@ -80,7 +84,7 @@ class MedallionPipeline:
         obs = Observation("silver_quality")
         from azure_etl_spark.operators.dedup import distinct_sorted
 
-        bronze = read_parquet(spark, self.path("bronze"), self.written.get("bronze"))
+        bronze = read_parquet(spark, self.path("bronze"), self._written.get("bronze"))
         df = distinct_sorted(bronze, [self.key])
         df = df.observe(
             obs,
@@ -90,14 +94,14 @@ class MedallionPipeline:
         if self.cache_silver:
             df = df.cache()
         write_parquet(df, self.path("silver"))
-        self.written["silver"] = df.schema
+        self._written["silver"] = df.schema
         self.results["silver_metrics"] = dict(obs.get)
         return df
 
     def silver_to_gold(self, spark: SparkSession) -> DataFrame:
         """silverToGold.scala: grouped min/max + difference + date parts,
         written partitioned by year/month/day."""
-        silver = read_parquet(spark, self.path("silver"), self.written.get("silver"))
+        silver = read_parquet(spark, self.path("silver"), self._written.get("silver"))
         gold = grouped_min_max(
             silver,
             keys=[self.key],

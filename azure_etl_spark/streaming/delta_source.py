@@ -1257,11 +1257,6 @@ class DeltaLogTableSource(DataSource):
     skipping); this source exists for the streaming tail, which needs
     the log's commit increments."""
 
-    # the stream's minpartitionnum default; ``register`` subclasses
-    # this with the session's defaultParallelism, so the historical 32
-    # holds only for a caller that registers this class by hand
-    default_min_partitions = 32
-
     @classmethod
     def name(cls):
         return "delta_log_table"
@@ -1303,21 +1298,21 @@ class DeltaLogTableSource(DataSource):
         )
 
     def streamReader(self, schema):
-        return DeltaLogStreamReader(
-            self.options, schema, self.default_min_partitions
-        )
+        return DeltaLogStreamReader(self.options, schema)
 
 
 def source_for(parallelism: int) -> type[DeltaLogTableSource]:
     """``DeltaLogTableSource`` with ``minpartitionnum`` defaulting to
     ``parallelism``. The class is built at run time, so cloudpickle
-    ships it by value, class attribute included, to the planner
+    ships it by value, ``parallelism`` included, to the planner
     worker, which has no JVM to ask."""
-    return type(
-        "DeltaLogTableSourceAt",
-        (DeltaLogTableSource,),
-        {"default_min_partitions": int(parallelism)},
-    )
+    parallelism = int(parallelism)
+
+    class DeltaLogTableSourceAt(DeltaLogTableSource):
+        def streamReader(self, schema):
+            return DeltaLogStreamReader(self.options, schema, parallelism)
+
+    return DeltaLogTableSourceAt
 
 
 def register(spark) -> None:
