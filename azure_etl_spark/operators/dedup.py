@@ -35,7 +35,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from azure_etl_spark.session import LOCAL_FRAME_TYPES, local_frame
+from azure_etl_spark.operators._budget import collect_within
+from azure_etl_spark.session import local_frame
 from azure_etl_spark.sources.files import ensure_min_partitions
 
 
@@ -531,11 +532,9 @@ def connected_components(
     and ~45% of total wall, all orchestration over a few thousand
     edges (every per-round join/checkpoint/probe is a full
     cluster-synchronized barrier; at 100 TB each barrier is worse).
-    When the symmetrized-distinct edge list fits the budget (checked
-    with a ``limit(budget+1)`` probe against the already-persisted
-    edges — bounded driver memory by construction, same budget-gate
-    design as the Delta reader's ``dv_broadcast_max_positions``), the
-    ids (two longs a row — never payloads) collect once and a
+    When the symmetrized-distinct edge list fits the budget (the
+    ``_budget.collect_within`` probe over the already-persisted edges),
+    the ids (two longs a row — never payloads) collect once and a
     union-find computes the identical min-reachable-id labels in
     microseconds, returning a local-relation frame. Over budget, the
     distributed rounds below run unchanged — the scale path is not
@@ -554,40 +553,39 @@ def connected_components(
         .persist()
     )
     id_type = edges.schema["a"].dataType
-    if driver_max_edges and isinstance(id_type, LOCAL_FRAME_TYPES):
-        head = edges.limit(driver_max_edges + 1).collect()
-        if len(head) <= driver_max_edges:
-            parent: dict = {}
+    head = collect_within(edges, driver_max_edges, "a")
+    if head is not None:
+        parent: dict = {}
 
-            def find(x):
-                r = x
-                while parent[r] != r:
-                    r = parent[r]
-                while parent[x] != r:  # path compression
-                    parent[x], x = r, parent[x]
-                return r
+        def find(x):
+            r = x
+            while parent[r] != r:
+                r = parent[r]
+            while parent[x] != r:  # path compression
+                parent[x], x = r, parent[x]
+            return r
 
-            for r in head:
-                a, b = r[0], r[1]
-                parent.setdefault(a, a)
-                parent.setdefault(b, b)
-                ra, rb = find(a), find(b)
-                if ra != rb:  # union by MIN id == min-reachable fixpoint
-                    if rb < ra:
-                        ra, rb = rb, ra
-                    parent[rb] = ra
-            out = local_frame(
-                pairs.sparkSession,
-                [(x, find(x)) for x in parent],
-                StructType(
-                    [
-                        StructField("id", id_type),
-                        StructField("component", id_type),
-                    ]
-                ),
-            )
-            edges.unpersist(blocking=False)
-            return out
+        for r in head:
+            a, b = r[0], r[1]
+            parent.setdefault(a, a)
+            parent.setdefault(b, b)
+            ra, rb = find(a), find(b)
+            if ra != rb:  # union by MIN id == min-reachable fixpoint
+                if rb < ra:
+                    ra, rb = rb, ra
+                parent[rb] = ra
+        out = local_frame(
+            pairs.sparkSession,
+            [(x, find(x)) for x in parent],
+            StructType(
+                [
+                    StructField("id", id_type),
+                    StructField("component", id_type),
+                ]
+            ),
+        )
+        edges.unpersist(blocking=False)
+        return out
     # init == first propagation round: every node takes min(self, direct
     # neighbors); edges are symmetrized so groupBy("a") covers all nodes
     labels = (
@@ -669,9 +667,9 @@ def resolve_duplicate_clusters(
     join/aggregate cascade (members -> best -> winners -> losers) that
     scheduled ~10 AQE stage-jobs on the sf0.1 funnel's media stage for
     a few thousand member rows. When the component labeling fits the
-    budget (a ``limit`` probe — free when ``connected_components``
-    already took its own driver fast path and returned a local
-    relation), the member (id, score) rows — scores computed BY SPARK
+    budget (``_budget.collect_within``, free when
+    ``connected_components`` already took its own driver fast path and
+    returned a local relation), the member (id, score) rows — scores computed BY SPARK
     with the caller's expression, ids only joined — collect once and
     the argmax/tie-break runs in Python with the identical rule (max
     score per component with NaN above every number and NaN == NaN,
@@ -688,40 +686,39 @@ def resolve_duplicate_clusters(
         )
         return df.join(losers, id_col, "left_anti")
     id_type = comp.schema["id"].dataType
-    if driver_max_nodes and isinstance(id_type, LOCAL_FRAME_TYPES):
-        head = comp.limit(driver_max_nodes + 1).collect()
-        if len(head) <= driver_max_nodes:
-            spark = df.sparkSession
-            comp_of = {r["id"]: r["component"] for r in head}
-            ids_df = local_frame(
-                spark,
-                [(i,) for i in comp_of],
-                StructType([StructField("id", id_type)]),
+    head = collect_within(comp, driver_max_nodes, "id")
+    if head is not None:
+        spark = df.sparkSession
+        comp_of = {r["id"]: r["component"] for r in head}
+        ids_df = local_frame(
+            spark,
+            [(i,) for i in comp_of],
+            StructType([StructField("id", id_type)]),
+        )
+        member_rows = (
+            df.select(F.col(id_col).alias("id"), keep_by.alias("__score"))
+            .join(ids_df, "id", "left_semi")
+            .collect()
+        )
+        by_comp: dict = {}
+        for r in member_rows:
+            by_comp.setdefault(comp_of[r["id"]], []).append(
+                (r["id"], r["__score"])
             )
-            member_rows = (
-                df.select(F.col(id_col).alias("id"), keep_by.alias("__score"))
-                .join(ids_df, "id", "left_semi")
-                .collect()
-            )
-            by_comp: dict = {}
-            for r in member_rows:
-                by_comp.setdefault(comp_of[r["id"]], []).append(
-                    (r["id"], r["__score"])
-                )
-            losers_local = []
-            for members in by_comp.values():
-                scored = [(i, _spark_order(s)) for i, s in members if s is not None]
-                if not scored:
-                    continue  # all-NULL scores: no winner, nobody drops
-                best = max(s for _, s in scored)
-                winner = min(i for i, s in scored if s == best)
-                losers_local.extend(i for i, _ in members if i != winner)
-            losers = local_frame(
-                spark,
-                [(i,) for i in losers_local],
-                StructType([StructField(id_col, id_type)]),
-            )
-            return df.join(losers, id_col, "left_anti")
+        losers_local = []
+        for members in by_comp.values():
+            scored = [(i, _spark_order(s)) for i, s in members if s is not None]
+            if not scored:
+                continue  # all-NULL scores: no winner, nobody drops
+            best = max(s for _, s in scored)
+            winner = min(i for i, s in scored if s == best)
+            losers_local.extend(i for i, _ in members if i != winner)
+        losers = local_frame(
+            spark,
+            [(i,) for i in losers_local],
+            StructType([StructField(id_col, id_type)]),
+        )
+        return df.join(losers, id_col, "left_anti")
     members = df.select(F.col(id_col).alias("id"), keep_by.alias("__score")).join(
         comp, "id"
     )

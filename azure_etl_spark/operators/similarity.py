@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from azure_etl_spark.functions.vectors import cosine, dot, norm
+from azure_etl_spark.operators._budget import collect_within
 from azure_etl_spark.session import local_frame
 
 
@@ -222,6 +223,13 @@ def kmeans_fit(
 
     ``dim`` (vector dimensionality) is read from the first row when
     not supplied — one 1-row job, independent of corpus size.
+
+    :func:`semantic_dedup`'s driver tier replays this fit in numpy on
+    inputs that fit its row budget, with identical assignments. Every
+    step but the centroid ``avg`` is a fixed-order fold; the tier
+    engages only where that ``avg`` is exact, so independent of the
+    partitioning: per dimension, sum(|v|) < 2^(g+53), with 2^g the
+    finest binary granularity among the nonzero values.
 
     Returns (assignments (id, cid), centroids (cid, centroid)).
     """
@@ -577,6 +585,147 @@ def ivf_pq_topk(
     )
 
 
+# driver tier of semantic_dedup: the fit (n*k*dim*max_iter) and the pair
+# pass (sum of cluster_size^2 * dim) may each take up to this many
+# multiply-adds per budget row; temporaries are cut into blocks of at
+# most _DRIVER_BLOCK doubles, so driver memory beyond the collected
+# vectors stays constant
+_DRIVER_WORK_PER_ROW = 1 << 14
+_DRIVER_BLOCK = 1 << 20
+
+
+def _sums_exact(x):
+    """True when every partial sum of any subset of ``x``'s rows, added
+    in any order, is an exact double in every column: per column, with
+    2^g the finest binary granularity among its nonzero values, the
+    absolute sum stays below 2^(g+53). Every partial sum is then a
+    multiple of 2^g below 2^(g+53), so Spark's ``avg`` cannot depend on
+    how the rows are partitioned."""
+    import math
+
+    import numpy as np
+
+    a = np.abs(x)
+    mant, exp = np.frexp(a)
+    bits = (mant * 2.0**53).astype(np.int64)  # exact: 53-bit significands
+    lowest = np.frexp((bits & -bits).astype(np.float64))[1] - 1
+    gran = np.where(a != 0, exp - 53 + lowest, 2048).min(axis=0)
+    try:
+        total = np.array([math.fsum(col) for col in a.T])
+    except OverflowError:
+        return False
+    with np.errstate(over="ignore"):
+        return bool((total < np.ldexp(1.0, gran + 53)).all())
+
+
+def _lloyd_local(x, k: int, max_iter: int):
+    """:func:`kmeans_fit`'s fit on driver-held rows sorted by id: init
+    from the first k rows as cids 1..k, exactly ``max_iter`` rounds, the
+    distance a sequential fold of (x-c)*(x-c) in array order, argmin
+    ties to the lowest cid, empty clusters dropped. Returns the cid
+    array of the last round's assignment."""
+    import numpy as np
+
+    n, dim = x.shape
+    cents, cids = x[:k], np.arange(1, k + 1)
+    for it in range(max_iter):
+        idx = np.empty(n, np.int64)
+        step = max(1, _DRIVER_BLOCK // len(cids))
+        for lo in range(0, n, step):
+            block = x[lo : lo + step]
+            acc = np.zeros((len(block), len(cids)))
+            for d in range(dim):
+                diff = block[:, d, None] - cents[None, :, d]
+                acc += diff * diff
+            idx[lo : lo + step] = acc.argmin(axis=1)  # first min: lowest cid
+        if it == max_iter - 1:
+            return cids[idx]
+        present, member = np.unique(idx, return_inverse=True)
+        sums = np.zeros((len(present), dim))
+        np.add.at(sums, member, x)  # exact in any order (_sums_exact)
+        cents = sums / np.bincount(member)[:, None]
+        cids = cids[present]
+
+
+def _semantic_dedup_local(
+    df: DataFrame, k: int, max_iter: int, threshold: float,
+    id_col: str, vec_col: str, budget: int | None,
+) -> DataFrame | None:
+    """:func:`semantic_dedup` on the driver, or None when the input is
+    outside the tier (the caller then runs the distributed path)."""
+    import math
+
+    import numpy as np
+    from pyspark.sql.types import (
+        ArrayType, BooleanType, DoubleType, FloatType, IntegerType,
+        StructField, StructType,
+    )
+
+    v_type = df.schema[vec_col].dataType
+    if not (
+        k >= 1 and max_iter >= 1
+        and isinstance(v_type, ArrayType)
+        and isinstance(v_type.elementType, (FloatType, DoubleType))
+    ):
+        return None
+    rows = collect_within(df.select(id_col, vec_col), budget, id_col)
+    if not rows or any(r[0] is None for r in rows):
+        return None
+    rows.sort(key=lambda r: r[0])
+    ids = [r[0] for r in rows]
+    vecs = [r[1] for r in rows]
+    dim = len(vecs[0]) if vecs[0] is not None else 0
+    if (
+        len(set(ids)) != len(ids)
+        or any(isinstance(i, float) and math.isnan(i) for i in ids)
+        or dim == 0
+        or any(v is None or len(v) != dim for v in vecs)
+    ):
+        return None
+    x = np.array(vecs, dtype=np.float64)  # a NULL element becomes NaN
+    n, kk = len(ids), min(k, len(ids))
+    cap = budget * _DRIVER_WORK_PER_ROW
+    if not np.isfinite(x).all() or n * kk * dim * max_iter > cap or not _sums_exact(x):
+        return None
+    cid = _lloyd_local(x, kk, max_iter)
+    sizes = np.bincount(cid)
+    if sum(int(s) ** 2 for s in sizes) * dim > cap:
+        return None
+    sq = np.zeros(n)
+    for d in range(dim):
+        sq += x[:, d] * x[:, d]
+    norms = np.sqrt(sq)
+    kept = np.ones(n, dtype=bool)
+    for c in np.flatnonzero(sizes > 1):
+        members = np.flatnonzero(cid == c)  # ascending ids
+        v, nv, s = x[members], norms[members], len(members)
+        step = max(1, _DRIVER_BLOCK // s)
+        for lo in range(0, s, step):
+            acc = np.zeros((min(step, s - lo), s))
+            for d in range(dim):
+                acc += v[lo : lo + step, d, None] * v[None, :, d]
+            den = nv[lo : lo + step, None] * nv[None, :]
+            # pair (i, j) counts only for a lower id i: j > i
+            later = np.arange(s)[None, :] > np.arange(lo, lo + len(acc))[:, None]
+            if (den[later] == 0).any():
+                return None  # Spark's ANSI division raises on this pair
+            with np.errstate(invalid="ignore"):
+                cos = acc / den
+            if np.isnan(cos[later]).any():
+                return None
+            kept[members[((cos >= threshold) & later).any(axis=0)]] = False
+    schema = StructType([
+        StructField(id_col, df.schema[id_col].dataType, df.schema[id_col].nullable),
+        StructField("cid", IntegerType()),
+        StructField("kept", BooleanType(), False),
+    ])
+    return local_frame(
+        df.sparkSession,
+        [(i, int(c), bool(kp)) for i, c, kp in zip(ids, cid, kept)],
+        schema,
+    )
+
+
 def semantic_dedup(
     df: DataFrame,
     k: int = 8,
@@ -584,6 +733,7 @@ def semantic_dedup(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    driver_max_rows: int | None = 20_000,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     deduplication by clustering embeddings first, then comparing pairs
@@ -598,8 +748,38 @@ def semantic_dedup(
     in the same cluster is cosine-similar above the threshold, which
     makes the output order-independent and exactly SQL-replayable.
 
+    DRIVER TIER (``driver_max_rows``): the distributed fit and pair
+    pass are about 16 barrier-bound jobs whatever the input size. When
+    the input has at most ``driver_max_rows`` rows, one
+    ``_budget.collect_within`` probe brings (id, vector) to the driver,
+    which runs the same fit (:func:`kmeans_fit`'s init, rounds,
+    sequential-fold distances and (distance, cid) tie-break) and the
+    same within-cluster pass (sequential-fold dot products and norms,
+    ``dot/(na*nb) >= threshold``) in numpy, and returns the result as a
+    local relation with the distributed path's schema: one or two jobs
+    in all. The result is bit-identical because every step is the same
+    double arithmetic in the same order, and the one step whose order
+    Spark does not fix, the per-dimension ``avg`` of a cluster, is only
+    trusted when it is exact in any order: per dimension, with 2^g the
+    finest binary granularity among the nonzero values, the tier needs
+    sum(|v|) < 2^(g+53) (float32 embeddings of ordinary range pass).
+    Every other input takes the distributed path unchanged: NULL or
+    duplicate ids, an id type ``local_frame`` cannot hold, NULL,
+    ragged, NaN or infinite vectors, a failed exactness check, a zero
+    norm product inside a shared cluster (Spark's ANSI division raises
+    there), or fit work (n*k*dim*max_iter) or pair work
+    (sum(s_i^2)*dim over cluster sizes s_i) above
+    ``driver_max_rows * 2^14`` multiply-adds. Driver memory is the
+    collected vectors plus blocks of at most 2^20 doubles.
+    ``driver_max_rows=None``/0 forces the distributed path.
+
     Returns (id_col, cid, kept) for every input row.
     """
+    local = _semantic_dedup_local(
+        df, k, max_iter, threshold, id_col, vec_col, driver_max_rows
+    )
+    if local is not None:
+        return local
     # lazy rounds: SemDeDup consumes only the assignments, once, so
     # the k-means chain is not cut into max_iter+1 eager checkpoint
     # jobs; it runs when the checkpoint below is built

@@ -24,6 +24,7 @@ import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -100,7 +101,12 @@ class MedallionPipeline:
 
     def silver_to_gold(self, spark: SparkSession) -> DataFrame:
         """silverToGold.scala: grouped min/max + difference + date parts,
-        written partitioned by year/month/day."""
+        written partitioned by year/month/day.
+
+        The returned frame is persisted, and the gold write fills the
+        cache, so the serving sinks read gold without re-running its
+        sort and aggregate over silver. The caller releases it (``run``
+        does after both sinks)."""
         silver = read_parquet(spark, self.path("silver"), self._written.get("silver"))
         gold = grouped_min_max(
             silver,
@@ -114,7 +120,9 @@ class MedallionPipeline:
             "difference_between_min_max",
             f"max_value_by_{self.key} - min_value_by_{self.key}",
         )
-        gold = stamp_date_parts(gold, as_of=self.as_of).orderBy(self.key)
+        gold = stamp_date_parts(gold, as_of=self.as_of).orderBy(self.key).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
         write_partitioned(gold, self.path("gold"), ["year", "month", "day"])
         return gold
 
@@ -133,7 +141,10 @@ class MedallionPipeline:
         self.to_bronze(raw)
         self.bronze_to_silver(spark)
         gold = self.silver_to_gold(spark)
-        self.gold_to_serving(spark, gold)
+        try:
+            self.gold_to_serving(spark, gold)
+        finally:
+            gold.unpersist()
         for layer in ("bronze", "silver", "gold", "serving_documents", "serving_stage"):
             self.results[layer] = self.path(layer)
         return gold

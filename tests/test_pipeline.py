@@ -159,3 +159,28 @@ def test_incremental_gold_merge_equals_full_recompute(spark, sf_dir):
         raw, keys=["symbol"], value="price", min_alias="mn", max_alias="mx"
     )
     assert sorted(map(tuple, merged.collect())) == sorted(map(tuple, full.collect()))
+
+
+def test_gold_to_serving_reads_one_materialization_of_gold(spark, sf_dir, tmp_path):
+    """The gold write fills gold's cache, so each serving sink is one
+    write job over it instead of re-running the gold sort and aggregate
+    over silver; run() releases the cache after both sinks."""
+    import uuid
+
+    pipe = MedallionPipeline(root=str(tmp_path), as_of=dt.date(2024, 1, 15))
+    pipe.to_bronze(crypto_view(spark, sf_dir))
+    pipe.bronze_to_silver(spark)
+    gold = pipe.silver_to_gold(spark)
+    sc = spark.sparkContext
+    group = f"gold-serving-{uuid.uuid4().hex}"
+    try:
+        sc.setJobGroup(group, "gold to serving")
+        pipe.gold_to_serving(spark, gold)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        gold.unpersist()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+
+    ran = MedallionPipeline(root=str(tmp_path / "run"), as_of=dt.date(2024, 1, 15))
+    assert not ran.run(spark, crypto_view(spark, sf_dir)).is_cached

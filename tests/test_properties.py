@@ -531,10 +531,12 @@ def _ref_semantic_dedup(vecs: dict[int, list[float]], k: int, iters: int, thr: f
 )
 @SET
 @pytest.mark.slow
-def test_semantic_dedup_matches_python_reference(spark, data):
+@pytest.mark.parametrize("driver_max_rows", [20_000, 0], ids=["driver", "distributed"])
+def test_semantic_dedup_matches_python_reference(spark, data, driver_max_rows):
     """Small integer vectors force centroid/assignment ties and exact
     cosine collisions — the determinism contract the SQL oracle relies
-    on. Zero vectors are excluded (cosine undefined)."""
+    on. Zero vectors are excluded (cosine undefined). Runs the driver
+    tier and the distributed path (``driver_max_rows=0``)."""
     from azure_etl_spark.operators.similarity import semantic_dedup
 
     vecs = {
@@ -547,7 +549,9 @@ def test_semantic_dedup_matches_python_reference(spark, data):
     df = spark.createDataFrame(
         [(i, v) for i, v in vecs.items()], "vec_id long, embedding array<double>"
     )
-    out = semantic_dedup(df, k=3, max_iter=2, threshold=0.999)
+    out = semantic_dedup(
+        df, k=3, max_iter=2, threshold=0.999, driver_max_rows=driver_max_rows
+    )
     got = {r["vec_id"]: (r["cid"], r["kept"]) for r in out.collect()}
     assign, dropped = _ref_semantic_dedup(vecs, k=3, iters=2, thr=0.999)
     assert set(got) == set(vecs)
