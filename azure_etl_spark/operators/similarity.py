@@ -225,7 +225,7 @@ def kmeans_fit(
     not supplied — one 1-row job, independent of corpus size.
 
     :func:`semantic_dedup`'s driver tier replays this fit in numpy on
-    inputs that fit its row budget, with identical assignments. Every
+    inputs that fit its budget, with identical assignments. Every
     step but the centroid ``avg`` is a fixed-order fold; the tier
     engages only where that ``avg`` is exact, so independent of the
     partitioning: per dimension, sum(|v|) < 2^(g+53), with 2^g the
@@ -585,12 +585,13 @@ def ivf_pq_topk(
     )
 
 
-# driver tier of semantic_dedup: the fit (n*k*dim*max_iter) and the pair
-# pass (sum of cluster_size^2 * dim) may each take up to this many
-# multiply-adds per budget row; temporaries are cut into blocks of at
-# most _DRIVER_BLOCK doubles, so driver memory beyond the collected
-# vectors stays constant
-_DRIVER_WORK_PER_ROW = 1 << 14
+# driver tier of semantic_dedup, per budget row: the collect may hold
+# _DRIVER_VALUES_PER_ROW vector elements (a budget row is a 64-d vector),
+# and the fit (n*k*dim*max_iter) and the pair pass (sum of
+# cluster_size^2 * dim) may each take _DRIVER_WORK_PER_ROW multiply-adds;
+# temporaries are cut into blocks of at most _DRIVER_BLOCK doubles
+_DRIVER_VALUES_PER_ROW = 64
+_DRIVER_WORK_PER_ROW = 1 << 15
 _DRIVER_BLOCK = 1 << 20
 
 
@@ -649,10 +650,11 @@ def _lloyd_local(x, k: int, max_iter: int):
 
 def _semantic_dedup_local(
     df: DataFrame, k: int, max_iter: int, threshold: float,
-    id_col: str, vec_col: str, budget: int | None,
+    id_col: str, vec_col: str, budget: int | None, dim: int | None,
 ) -> DataFrame | None:
     """:func:`semantic_dedup` on the driver, or None when the input is
-    outside the tier (the caller then runs the distributed path)."""
+    outside the tier (the caller then runs the distributed path). ``dim``
+    is the first row's vector length, None when there is no first vector."""
     import math
 
     import numpy as np
@@ -663,29 +665,42 @@ def _semantic_dedup_local(
 
     v_type = df.schema[vec_col].dataType
     if not (
-        k >= 1 and max_iter >= 1
+        budget and dim and k >= 1 and max_iter >= 1
+        # Python's order and equality are Spark's for every id type the
+        # probe admits, except strings under a non-binary collation
+        and getattr(df.schema[id_col].dataType, "collation", "UTF8_BINARY")
+        == "UTF8_BINARY"
         and isinstance(v_type, ArrayType)
         and isinstance(v_type.elementType, (FloatType, DoubleType))
     ):
         return None
-    rows = collect_within(df.select(id_col, vec_col), budget, id_col)
+    cap = budget * _DRIVER_WORK_PER_ROW
+    # bound the collect before it runs: budget rows, budget 64-d vectors'
+    # worth of values, and no more rows than the fit's work cap admits
+    limit = min(
+        budget,
+        budget * _DRIVER_VALUES_PER_ROW // dim,
+        cap // (min(k, budget) * dim * max_iter),
+    )
+    rows = collect_within(df.select(id_col, vec_col), limit, id_col)
     if not rows or any(r[0] is None for r in rows):
         return None
-    rows.sort(key=lambda r: r[0])
+    # Spark hands binary ids over as (unhashable) bytearray
+    rows = sorted(
+        ((bytes(i) if isinstance(i, bytearray) else i, v) for i, v in rows),
+        key=lambda r: r[0],
+    )
     ids = [r[0] for r in rows]
     vecs = [r[1] for r in rows]
-    dim = len(vecs[0]) if vecs[0] is not None else 0
     if (
         len(set(ids)) != len(ids)
         or any(isinstance(i, float) and math.isnan(i) for i in ids)
-        or dim == 0
         or any(v is None or len(v) != dim for v in vecs)
     ):
         return None
     x = np.array(vecs, dtype=np.float64)  # a NULL element becomes NaN
     n, kk = len(ids), min(k, len(ids))
-    cap = budget * _DRIVER_WORK_PER_ROW
-    if not np.isfinite(x).all() or n * kk * dim * max_iter > cap or not _sums_exact(x):
+    if not np.isfinite(x).all() or not _sums_exact(x):
         return None
     cid = _lloyd_local(x, kk, max_iter)
     sizes = np.bincount(cid)
@@ -750,33 +765,45 @@ def semantic_dedup(
 
     DRIVER TIER (``driver_max_rows``): the distributed fit and pair
     pass are about 16 barrier-bound jobs whatever the input size. When
-    the input has at most ``driver_max_rows`` rows, one
-    ``_budget.collect_within`` probe brings (id, vector) to the driver,
-    which runs the same fit (:func:`kmeans_fit`'s init, rounds,
-    sequential-fold distances and (distance, cid) tie-break) and the
-    same within-cluster pass (sequential-fold dot products and norms,
-    ``dot/(na*nb) >= threshold``) in numpy, and returns the result as a
-    local relation with the distributed path's schema: one or two jobs
-    in all. The result is bit-identical because every step is the same
-    double arithmetic in the same order, and the one step whose order
-    Spark does not fix, the per-dimension ``avg`` of a cluster, is only
-    trusted when it is exact in any order: per dimension, with 2^g the
-    finest binary granularity among the nonzero values, the tier needs
-    sum(|v|) < 2^(g+53) (float32 embeddings of ordinary range pass).
-    Every other input takes the distributed path unchanged: NULL or
-    duplicate ids, an id type ``local_frame`` cannot hold, NULL,
-    ragged, NaN or infinite vectors, a failed exactness check, a zero
-    norm product inside a shared cluster (Spark's ANSI division raises
-    there), or fit work (n*k*dim*max_iter) or pair work
-    (sum(s_i^2)*dim over cluster sizes s_i) above
-    ``driver_max_rows * 2^14`` multiply-adds. Driver memory is the
-    collected vectors plus blocks of at most 2^20 doubles.
-    ``driver_max_rows=None``/0 forces the distributed path.
+    the input fits the budget, one ``_budget.collect_within`` probe
+    brings (id, vector) to the driver, which runs the same fit
+    (:func:`kmeans_fit`'s init, rounds, sequential-fold distances and
+    (distance, cid) tie-break) and the same within-cluster pass
+    (sequential-fold dot products and norms, ``dot/(na*nb) >=
+    threshold``) in numpy, and returns the result as a local relation
+    with the distributed path's schema: two jobs in all (the first
+    row's length, then the collect). The result is bit-identical
+    because every step is the same double arithmetic in the same order,
+    and the one step whose order Spark does not fix, the per-dimension
+    ``avg`` of a cluster, is only trusted when it is exact in any order:
+    per dimension, with 2^g the finest binary granularity among the
+    nonzero values, the tier needs sum(|v|) < 2^(g+53) (float32
+    embeddings of ordinary range pass). Every other input takes the
+    distributed path unchanged: NULL or duplicate ids, an id type
+    ``local_frame`` cannot hold or a string id under a non-binary
+    collation, NULL, ragged, NaN or infinite vectors, a failed
+    exactness check, a zero norm product inside a shared cluster
+    (Spark's ANSI division raises there), or an input over the budget.
+    The budget is checked before the collect runs: at most
+    ``driver_max_rows`` rows and ``driver_max_rows * 64`` vector
+    elements, and fit work (n*k*dim*max_iter) within
+    ``driver_max_rows * 2^15`` multiply-adds; pair work (sum(s_i^2)*dim
+    over cluster sizes s_i) is held to the same cap after the fit.
+    Driver memory is thus the collected elements plus blocks of at most
+    2^20 doubles. The default was timed against the distributed path up
+    to 20k 64-d rows (SCALE.md, SemDeDup finding 3).
+    ``driver_max_rows=None``/0 forces the distributed path;
+    ``tools/scale_probe_semdedup.py`` and ``tools/ab_kmeans_r14.py``
+    pass 0 to time that path.
 
     Returns (id_col, cid, kept) for every input row.
     """
+    # the one 1-row job kmeans_fit would run for dim; the tier sizes its
+    # collect with it
+    first = df.select(vec_col).head()
+    dim = len(first[0]) if first is not None and first[0] is not None else None
     local = _semantic_dedup_local(
-        df, k, max_iter, threshold, id_col, vec_col, driver_max_rows
+        df, k, max_iter, threshold, id_col, vec_col, driver_max_rows, dim
     )
     if local is not None:
         return local
@@ -785,7 +812,7 @@ def semantic_dedup(
     # jobs; it runs when the checkpoint below is built
     assign, _ = kmeans_fit(
         df, k=k, max_iter=max_iter, id_col=id_col, vec_col=vec_col,
-        eager_rounds=False,
+        eager_rounds=False, dim=dim,
     )
     vecs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).join(
         assign.withColumnRenamed(id_col, "id"), "id"

@@ -199,8 +199,9 @@ class CurationPipeline:
     # that need the sqrt-rule SemDeDup k under "off" should pin
     # ``semantic_k``; otherwise one survivor count still runs for it.
     # SemDeDup's driver tier also stays eager under "off": when the
-    # surviving embeddings fit its row budget, its one collect is a job
-    # that runs while run() builds the plan.
+    # surviving embeddings fit its budget, its collect is one more job
+    # (after the 1-row length probe the distributed path runs too) that
+    # runs while run() builds the plan.
     counts: str = "observed"
     # declared media modalities (round 13): when set, the media stage
     # routes by declaration instead of probing the media frame with a

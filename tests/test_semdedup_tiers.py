@@ -16,6 +16,7 @@ from hypothesis import strategies as st
 from pyspark.errors import PySparkException
 from pyspark.sql import functions as F
 
+from azure_etl_spark.operators._budget import collect_within
 from azure_etl_spark.operators.similarity import semantic_dedup
 from azure_etl_spark.sources.files import load_table
 
@@ -83,6 +84,37 @@ def test_string_ids_and_column_names(emb):
     _agree(df, True, k=8, max_iter=2, threshold=0.25, id_col="doc", vec_col="v")
 
 
+def test_collated_string_ids_fall_back(emb):
+    """Under UTF8_LCASE, Spark orders "B" before "c" and Python does
+    not, so the tier cannot replay the init or the pair order."""
+    df = emb.select(
+        F.collate(
+            F.format_string("%s%05d", F.when(F.col("vec_id") % 2 == 0, "B")
+                            .otherwise("c"), "vec_id"),
+            "UTF8_LCASE",
+        ).alias("doc"),
+        "embedding",
+    )
+    _agree(df, False, k=8, max_iter=2, threshold=0.25, id_col="doc")
+
+
+@pytest.mark.parametrize("as_bytes", [True, False])
+def test_binary_ids(spark, emb, as_bytes):
+    """With binaryAsBytes off, Spark hands binary values to Python as
+    unhashable bytearrays."""
+    conf = "spark.sql.execution.pyspark.binaryAsBytes"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, str(as_bytes).lower())
+    try:
+        df = emb.select(
+            F.unhex(F.format_string("%08x", "vec_id")).alias("digest"), "embedding"
+        )
+        rows = _agree(df, True, k=8, max_iter=2, threshold=0.25, id_col="digest")
+        assert type(rows[0]["digest"]) is (bytes if as_bytes else bytearray)
+    finally:
+        spark.conf.set(conf, old)
+
+
 @given(
     data=st.lists(
         st.lists(st.integers(-3, 3), min_size=4, max_size=4), min_size=2, max_size=14
@@ -144,20 +176,59 @@ def test_zero_vector_alone_in_its_cluster_stays_in_the_tier(spark):
 
 
 def test_pair_work_over_budget_falls_back(spark):
-    """200 rows of dim 100 in one cluster: pair work 200^2 * 100 = 4e6
-    multiply-adds fits a 300-row budget's cap (300 * 2^14) and not a
-    200-row budget's (200 * 2^14), though the rows fit both."""
+    """600 rows of dim 64 in one cluster: pair work 600^2 * 64 = 2.3e7
+    multiply-adds fits an 800-row budget's cap (800 * 2^15) and not a
+    600-row budget's (600 * 2^15), though the rows, their elements and
+    the fit work fit both."""
     df = spark.createDataFrame(
-        [(i, [1.0] * 99 + [1.0 + i / 256]) for i in range(200)],
+        [(i, [1.0] * 63 + [1.0 + i / 1024]) for i in range(600)],
         "vec_id long, embedding array<double>",
     )
     kw = dict(k=1, max_iter=1, threshold=0.99995)
-    tier = semantic_dedup(df, driver_max_rows=300, **kw)
-    over = semantic_dedup(df, driver_max_rows=200, **kw)
+    tier = semantic_dedup(df, driver_max_rows=800, **kw)
+    over = semantic_dedup(df, driver_max_rows=600, **kw)
     assert _is_local(tier) and not _is_local(over)
     rows = sorted(tier.collect())
     assert rows == sorted(over.collect())
-    assert 0 < sum(r["kept"] for r in rows) < 200
+    assert 0 < sum(r["kept"] for r in rows) < 600
+
+
+@pytest.mark.parametrize(
+    "dim,k,max_iter,limit",
+    [
+        (2048, 2, 2, 300 * 64 // 2048),                # element cap: 9 rows
+        (64, 200, 3, 300 * (1 << 15) // (200 * 64 * 3)),  # fit cap: 256 rows
+    ],
+    ids=["elements", "fit_work"],
+)
+def test_budget_bounds_the_collect_before_it_runs(
+    spark, monkeypatch, dim, k, max_iter, limit
+):
+    """300 rows fit a 300-row budget, but not its element cap at dim
+    2048 nor its fit-work cap at dim 64 and k = 200: the probe must ask
+    for no more rows than those caps admit and fall back."""
+    from azure_etl_spark.operators import similarity
+
+    seen = []
+
+    def spy(df, budget, key):
+        rows = collect_within(df, budget, key)
+        seen.append((budget, rows))
+        return rows
+
+    monkeypatch.setattr(similarity, "collect_within", spy)
+    df = spark.createDataFrame(
+        [(i, [1.0 + (i * 7 + d) % 13 for d in range(dim)]) for i in range(300)],
+        "vec_id long, embedding array<double>",
+    )
+    kw = dict(k=k, max_iter=max_iter, threshold=0.99)
+    out = semantic_dedup(df, driver_max_rows=300, **kw)
+    assert seen == [(limit, None)]
+    assert not _is_local(out)
+    if dim == 64:  # the 2048-d distributed reference is slow
+        assert sorted(out.collect()) == sorted(
+            semantic_dedup(df, driver_max_rows=0, **kw).collect()
+        )
 
 
 def test_tier_runs_at_most_two_jobs(spark, emb):

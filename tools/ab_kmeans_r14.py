@@ -101,8 +101,9 @@ def build(spark, sf_dir):
     )
     ids = load_table(spark, sf_dir, "documents").select("doc_id")
     surviving = emb.join(ids, "doc_id")
+    # driver_max_rows=0: the distributed path, the one that calls kmeans_fit
     return similarity.semantic_dedup(
-        surviving, k=45, threshold=0.95, id_col="doc_id"
+        surviving, k=45, threshold=0.95, id_col="doc_id", driver_max_rows=0
     )
 
 

@@ -681,9 +681,12 @@ SPECIAL = {
         "The reference pipeline end-to-end (bronze parquet -> silver "
         "dedup+cast -> gold min/max). The timed bench run includes the "
         "four layer WRITES (parquet, snapshot commit, document + staged "
-        "warehouse sinks); the plan below is the gold aggregate read "
-        "back off silver: scan-side projection, partial min/max below "
-        "one Exchange on symbol. Each layer boundary is a real "
+        "warehouse sinks); the plan below is the gold frame the sinks "
+        "read. silver_to_gold persists the sorted gold aggregate "
+        "(scan-side projection, partial min/max below one Exchange on "
+        "symbol) and its own write fills the cache, so both sinks scan "
+        "that one materialization (InMemoryRelation below) instead of "
+        "re-reading silver. Each layer boundary is a real "
         "materialization, so no stage's lineage compounds into the next."
         ,
         _medallion_gold_df,
@@ -722,7 +725,11 @@ SPECIAL = {
         "with receipts; and counts=\"off\" now fuses the funnel into "
         "one lazy plan (no persists/count barriers) when the per-stage "
         "survivor counts aren't wanted, output bit-identical "
-        "(test_funnel_counts_off_fuses_and_matches)."
+        "(test_funnel_counts_off_fuses_and_matches). SemDeDup's "
+        "survivors fit its driver tier here, so its stage reads a "
+        "LocalRelation (the fit and pair pass ran in numpy after one "
+        "collect; SCALE.md SemDeDup finding 3) instead of the k-means "
+        "chain."
         ,
         _corpus_funnel_df,
     ),
